@@ -297,8 +297,9 @@ def test_query_at_generation_refuses_after_drop_and_prune(spark,
 
 def test_zarr_query_at_generation_parity(spark, tmp_path):
     """The zarr layout shares the staleness gate: append-only history
-    reconstructs (via a pushed key predicate over the historical
-    partition set), a replaced partition refuses."""
+    reconstructs (the scan reads exactly the historical partition list,
+    so a partition committed after gen N never appears), a replaced
+    partition refuses."""
     from zcollection_spark.zarr3.collection import create_zarr_collection
     schema = (zc.SchemaBuilder()
               .add_dimension("i")
@@ -462,31 +463,3 @@ def test_changes_between_two_generations_zarr_parity(spark, tmp_path):
     assert coll.changes(g1, g2)["added"] == ["num=2"]
     with pytest.raises(ValueError, match="newer than"):
         coll.changes(coll.generation(), g1)
-
-
-def test_zone_keys_predicate_exact_past_multikey_cap(spark, tmp_path):
-    """Past the 512-partition multi-key planning cap the PRUNING caller
-    may drop the predicate (rows re-filter below), but the TIME-TRAVEL
-    caller must get an exact composite-key isin — None there would
-    silently leak post-snapshot partitions into a historical read."""
-    from zcollection_spark.zarr3.collection import create_zarr_collection
-    schema = (zc.SchemaBuilder().add_dimension("i")
-              .add_variable("i", "int64", ("i",))
-              .add_variable("ts", "datetime64[ns]", ("i",))
-              .build())
-    coll = create_zarr_collection(
-        spark, str(tmp_path / "zk"), schema=schema, axis="i",
-        partitioning=zc.Date(("ts",), resolution="D"))
-    rels = [f"year={2000 + y}/month={m}/day={d}"
-            for y in range(2) for m in range(1, 13)
-            for d in range(1, 27)]          # 624 relpaths, 3 keys
-    assert len(rels) > 512
-    assert coll._zone_keys_predicate(rels) is None          # pruning
-    pred = coll._zone_keys_predicate(rels, exact=True)      # time-travel
-    assert pred is not None
-    probe = spark.createDataFrame(
-        [(2000, 1, 1), (2001, 12, 26), (2000, 1, 28), (2002, 1, 1)],
-        "year int, month int, day int")
-    got = sorted(tuple(r) for r in probe.where(pred).collect())
-    # day=28 and year=2002 fall outside the set; the two members match
-    assert got == [(2000, 1, 1), (2001, 12, 26)]

@@ -129,6 +129,118 @@ def test_zarr_values_match_parquet_source(spark, zarr_events):
            [tuple(r) for r in src.collect()]
 
 
+@pytest.fixture(scope="module")
+def zarr_rich(spark, tmp_path_factory):
+    """Four daily partitions exercising every decode branch: a string,
+    an nD and a nested-group variable, an immutable, zone-map stats and
+    a variable declared after the data was written.  Generation
+    ``pinned`` is pinned, then day 2 is upserted and day 5 appended,
+    so an ``at_generation`` read serves day 2 from its retained copy
+    and must not see day 5."""
+    from types import SimpleNamespace
+    n = 12
+    schema = (zc.SchemaBuilder().add_dimension("time")
+              .add_dimension("x", size=2).add_group("grp")
+              .add_variable("time", "datetime64[us]", ("time",))
+              .add_variable("id", "int64", ("time",))
+              .add_variable("value", "float64", ("time",))
+              .add_variable("label", "str", ("time",))
+              .add_variable("vec", "float32", ("time", "x"))
+              .add_variable("grp/w", "float32", ("time",))
+              .add_variable("static", "float32", ("x",))
+              .build("time"))
+    coll = create_zarr_collection(
+        spark, str(tmp_path_factory.mktemp("rich") / "z"), schema=schema,
+        axis="time", partitioning=zc.Date(("time",), resolution="D"),
+        stats_columns=["value"])
+
+    def frame(ids, values, **extra):
+        ids = np.asarray(ids, dtype=np.int64)
+        pdf = pd.DataFrame({
+            "time": (np.datetime64("2024-01-01T01", "us")
+                     + (ids // 3) * np.timedelta64(1, "D")
+                     + ids * np.timedelta64(1, "m")),
+            "id": ids, "value": np.asarray(values, dtype=np.float64),
+            "label": [f"s{i}" for i in ids],
+            "vec": [[float(i), float(-i)] for i in ids],
+            "grp/w": ids.astype(np.float32),
+            "static": [[1.0, 2.0]] * len(ids), **extra})
+        struct = coll.schema.with_partition_axis("time").to_struct_type()
+        return spark.createDataFrame(pdf[struct.fieldNames()],
+                                     schema=struct)
+
+    coll.insert(frame(range(n), np.arange(n) * 10.0))
+    coll.add_variable("quality", "float64", fill_value=-5.0)
+    pinned = coll.generation()
+    coll.pin_generation(pinned)
+    at_pin = _zarr_rows(
+        spark.read.format("zarr3").option("path", coll.path).load()
+        .select(*[v.name for v in coll.schema.partitioned_variables]))
+    coll.insert(frame([4], [41.0], quality=[7.0]), merge="upsert")
+    coll.insert(frame([13], [1.0], quality=[8.0]))
+    return SimpleNamespace(coll=coll, pinned=pinned, at_pin=at_pin)
+
+
+def _zarr_rows(df) -> list:
+    return sorted((r.asDict(recursive=True) for r in df.collect()),
+                  key=lambda row: json.dumps(row, sort_keys=True,
+                                             default=str))
+
+
+@pytest.mark.parametrize("kwargs", [
+    {},
+    {"variables": ["id", "label"]},
+    {"variables": ["year", "month", "day"]},
+    {"filters": "day >= 2", "where": "value > 75.0",
+     "variables": ["id", "value"]},
+    {"at_generation": "pinned"},
+    {"variables": ["id", "quality"]},
+    {"variables": ["id", "vec"]},
+    {"variables": ["id", "static"]},
+    {"nested": True},
+], ids=["all", "projection", "keys_only", "where_zone_pruned",
+        "at_generation_retained", "evolved_fill", "nd", "immutable",
+        "nested"])
+def test_zarr_query_matches_datasource(spark, zarr_rich, kwargs):
+    """``query()`` plans on the driver — no ``zarr3`` BatchScan in its
+    physical plan — and returns exactly what the ``zarr3`` DataSource
+    reads from the same partitions."""
+    from pyspark.sql import functions as F
+    from zcollection_spark.schema import nest_struct_columns
+    coll = zarr_rich.coll
+    if kwargs.get("at_generation") == "pinned":
+        kwargs = {"at_generation": zarr_rich.pinned}
+    got = coll.query(**kwargs)
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "BatchScan" not in plan, plan
+    if "static" in got.columns:   # immutables: attached, not scanned
+        assert {tuple(r["static"]) for r in got.collect()} == {(1.0, 2.0)}
+        got = got.drop("static")
+    if "at_generation" in kwargs:
+        assert _zarr_rows(got) == zarr_rich.at_pin
+        return
+    reader = spark.read.format("zarr3").option("path", coll.path)
+    if "variables" in kwargs:
+        reader = reader.option("columns", ",".join(
+            {*kwargs["variables"], *coll.partitioning.keys,
+             *(["value"] if "where" in kwargs else [])}))
+    want = reader.load()
+    assert "BatchScan" in \
+        want._jdf.queryExecution().executedPlan().toString()
+    if "where" in kwargs:
+        want = (want.where(F.expr(kwargs["filters"]))
+                .where(F.expr(kwargs["where"])))
+        # the zone map keeps days 3 and 4 of 2-4 (day 2 peaks at 50)
+        assert coll.query(**kwargs, ordered=False) \
+            .rdd.getNumPartitions() == 2
+    if kwargs.get("nested"):
+        want = nest_struct_columns(want.select(
+            *[v.name for v in coll.schema.partitioned_variables]))
+    else:
+        want = want.select(*got.columns)
+    assert _zarr_rows(got) == _zarr_rows(want)
+
+
 def test_zarr_reopen(spark, zarr_events):
     coll = open_zarr_collection(spark, zarr_events.path)
     assert len(coll.partitions()) == 30

@@ -5,6 +5,10 @@ near deduplication, similarity search over embeddings, text analysis, and
 multimodal-column plumbing — all designed partition-parallel for 100 TB
 (JVM-side expressions wherever possible; Arrow-batched pandas only where
 Spark lacks a primitive).
+
+Rounding contract: every rounded output column is Spark's ``round(x,
+n)``, which rounds the double's shortest decimal form half UP
+(0.5703125 -> 0.570313 at 6 dp), not half to even as Python's ``round``.
 """
 
 from .multimodal import (attach_fake_payload, decode_ppm, decode_wav,

@@ -8,8 +8,14 @@ arrays (``io/partition.py:145-169`` semantics) with the partition key
 stamped into group attributes as ``_zc_partition_key``
 (``collection/base.py:508-516``).  The catalog PUT commits visibility.
 
-Reads go through the registered ``zarr3`` Python DataSource (partition
-pruning via filter pushdown + per-variable column projection).
+Reads are planned on the driver: every collection read (``query``,
+``to_df``, ``map``, ``update``, the merge read of ``insert``) resolves
+its exact partition list from the catalog — key filters, zone maps, the
+``at_generation`` snapshot and its retained copies — and scans that list
+as ``spark.range(n).mapInArrow(...)``, task ``i`` decoding partition
+``i`` with the ``zarr3`` DataSource's own per-partition decoder
+(``datasource.read_partition``).  Planning costs no Python-worker round
+trip; the registered ``zarr3`` DataSource remains the public format API.
 
 Scope: numeric/bool/datetime variables (Zarr v3 core types) plus
 variable-length strings (v3 "string" data type via the vlen-utf8 codec).
@@ -60,9 +66,7 @@ def write_partition_group(spec: dict, pdf: pd.DataFrame) -> str:
     (reference ``collection/base.py:481-519`` semantics, minus the
     fragmented-key race — callers shuffle by key first).
     """
-    import shutil as _shutil
-    from ..partitioning import from_json as pj
-    part = pj(json.loads(spec["partitioning_json"]))
+    part = partitioning_from_json(json.loads(spec["partitioning_json"]))
     axis = spec["axis"]
     key = {k: int(pdf[k].iloc[0]) for k in spec["keys"]}
     rel = part.encode(key)
@@ -77,7 +81,7 @@ def write_partition_group(spec: dict, pdf: pd.DataFrame) -> str:
     # local paths only; object-store staging never hits it.
     if not root.startswith(("s3://", "s3a://", "s3n://")) \
             and Path(group_path).exists():
-        _shutil.rmtree(group_path, ignore_errors=True)
+        shutil.rmtree(group_path, ignore_errors=True)
     write_group(group_path, {"_zc_partition_key": json.dumps(key)},
                 conf=conf)
     chunk_rows = spec["chunk_rows"]
@@ -118,6 +122,20 @@ def write_partition_group(spec: dict, pdf: pd.DataFrame) -> str:
                     shard_shape=shard, codec="zstd", level=spec["level"],
                     conf=conf)
     return rel
+
+
+def _task_per_item(spark: SparkSession, items: list, decode: Callable,
+                   struct) -> DataFrame:
+    """One Spark task per item: task ``i`` emits ``decode(items[i])``,
+    an Arrow batch of ``struct``.  ``items`` ships inside the task
+    closure, so planning needs no Python worker."""
+    def run(batches):
+        for batch in batches:
+            for i in batch.column(0).to_pylist():
+                yield decode(items[i])
+
+    n = len(items)
+    return spark.range(0, n, 1, max(n, 1)).mapInArrow(run, struct)
 
 
 def create_zarr_collection(spark: SparkSession, path: str, *,
@@ -236,10 +254,7 @@ class ZarrCollection:
         self._fs = fs_for(self.path, spark)
         self._catalog = Catalog(self._fs, self.path,
                                 walk_depth=partitioning.depth)
-        # base-scan plan cache (see to_df): building a Python-DataSource
-        # DataFrame costs a driver↔Python-worker planning round trip
-        # (~100ms) PER CALL — measured as the dominant cost of a pruned
-        # single-partition query, and pure overhead when nothing changed
+        # to_df() scans, one per (projection, endpoint conf, generation)
         self._df_cache: dict = {}
         # sidecar bloom payload cache, keyed by catalog ref — initialized
         # here (NOT lazily in query()) so no per-query state lives outside
@@ -366,8 +381,8 @@ class ZarrCollection:
         from the executors, commit the catalog.
 
         ``merge`` mirrors the parquet collection's strategies; colliding
-        partitions are read back through the datasource, merged with one
-        DataFrame program, and rewritten wholesale (Zarr groups are
+        partitions are read back (``_scan``), merged with one DataFrame
+        program, and rewritten wholesale (Zarr groups are
         replaced atomically per partition — stale chunks are removed)."""
         self._write_immutable(df)
         part_names = [v.name for v in self.schema.partitioned_variables
@@ -384,13 +399,7 @@ class ZarrCollection:
         colliding = sorted(set(incoming_rel) & existing_rel)
         strategy = resolve_merge(merge)
         if colliding and strategy is not merge_replace:
-            filters = " or ".join(
-                "(" + " and ".join(
-                    f"{k} == {v}" for k, v in
-                    self.partitioning.decode(rel).items()) + ")"
-                for rel in colliding)
-            existing = self.to_df().where(
-                compile_filter(filters).to_column())
+            existing = self._scan([(self.path, rel) for rel in colliding])
             derived = strategy(existing, derived, axis=self.axis,
                                keys=tuple(keys))
         written = self._write_partitions(derived, txn=txn)
@@ -472,48 +481,44 @@ class ZarrCollection:
             catalog=self._catalog, txn=txn, stats_fn=stats_fn)
 
     # ------------------------------------------------------------------
-    def to_df(self, *, variables: Iterable[str] | None = None) -> DataFrame:
+    def _scan(self, sources: list[tuple[str, str]],
+              variables: Iterable[str] | None = None) -> DataFrame:
+        """Scan a resolved read set: ``sources`` lists ``(base,
+        relpath)`` pairs, ``base`` being the live root or a retained
+        ``_catalog/retained/gen-N`` copy.  One ``mapInArrow`` task per
+        source, in list order, decodes its partition group with
+        ``datasource.read_partition``; ``variables`` (plus the partition
+        keys) narrows the decoded columns.  Nothing is planned in a
+        Python worker."""
         from .blobs import capture_blob_conf
+        wanted = (None if variables is None
+                  else set(variables) | set(self.partitioning.keys))
+        struct = datasource.scan_struct(self.schema, self.partitioning,
+                                        wanted)
+        schema, partitioning = self.schema, self.partitioning
         conf = capture_blob_conf()
-        # Reuse the planned base scan while nothing observable changed:
-        # the cache key carries the catalog generation (any insert /
-        # drop / compact bumps it → fresh plan sees the new state) and
-        # the captured endpoint conf (tests repoint stores mid-process).
-        # Pruning is unaffected — partition-key predicates push into
-        # the SAME reader at execution time, whatever filters the query
-        # stacks on top of the cached scan.
+        return _task_per_item(
+            self.spark, list(sources),
+            lambda src: datasource.read_partition(
+                src[0], src[1], struct, schema, partitioning, conf),
+            struct)
+
+    def to_df(self, *, variables: Iterable[str] | None = None) -> DataFrame:
+        """Every live partition as one scan.  The DataFrame is reused
+        while nothing observable changed: the key carries the catalog
+        generation (a commit yields a fresh scan of the new list) and
+        the captured endpoint conf (tests repoint stores mid-process)."""
+        from .blobs import capture_blob_conf
         key = (None if variables is None else tuple(sorted(variables)),
-               json.dumps(conf, sort_keys=True), self.generation())
+               json.dumps(capture_blob_conf(), sort_keys=True),
+               self.generation())
         cached = self._df_cache.get(key)
-        if cached is not None:
-            return cached
-        reader = (self.spark.read.format("zarr3")
-                  .option("path", self.path))
-        if conf is not None:
-            # DataSource code runs in Python workers, which keep the env
-            # they were born with — ship the endpoint config in the plan
-            reader = reader.option("blob_conf", json.dumps(conf))
-        if variables is not None:
-            cols = set(variables) | set(self.partitioning.keys)
-            reader = reader.option("columns", ",".join(sorted(cols)))
-        df = reader.load()
-        # The cached scan SHARES one reader instance across every query
-        # planned on top of it, and ``ZarrReader.pushFilters`` keeps its
-        # accepted-filter state on that instance — but Spark only calls
-        # pushFilters when a query HAS pushable filters, so a filterless
-        # query planned after a filtered one would inherit the previous
-        # query's pruning (read [1,2] forever after a num in (1,2)
-        # read).  Baking one trivially-true PUSHABLE predicate into the
-        # cached plan guarantees every derived query's planning invokes
-        # pushFilters and RESETS that state (the reader rejects
-        # IsNotNull, so it survives as a no-op row filter; partition
-        # keys are never null).  Regression-pinned in
-        # test_generations.py::test_zarr_filterless_query_after_filtered.
-        df = df.where(F.col(self.partitioning.keys[0]).isNotNull())
-        if len(self._df_cache) > 8:  # stale generations/projections
-            self._df_cache.clear()
-        self._df_cache[key] = df
-        return df
+        if cached is None:
+            if len(self._df_cache) > 8:  # stale generations/projections
+                self._df_cache.clear()
+            cached = self._df_cache[key] = self._scan(
+                [(self.path, rel) for rel in self.partitions()], variables)
+        return cached
 
     def add_variable(self, name: str, dtype: str, *,
                      dimensions=None, fill_value=None,
@@ -560,43 +565,33 @@ class ZarrCollection:
         hitting 50 rows of a 10⁹-row collection reads a few chunks, not
         a partition.
         """
-        from pyspark.sql import types as T
+        import pyarrow as pa
+        from .blobs import capture_blob_conf
         from .core import read_array_slice
         sel = None if variables is None else set(variables)
-        var_schemas = [v for v in self.schema.partitioned_variables
-                       if sel is None or v.name in sel]
-        names = [v.name for v in var_schemas]
-        struct = T.StructType(
-            [f for f in self.schema.to_struct_type().fields
-             if f.name in set(names)])
-        rows = [(rel, int(start), int(stop))
-                for rel, spans in ranges.items()
-                for start, stop in spans]
-        if not rows:
-            return self.spark.createDataFrame([], struct)
-        nd = {v.name for v in var_schemas if len(v.dimensions) > 1}
+        struct = datasource.scan_struct(
+            self.schema, self.partitioning,
+            {v.name for v in self.schema.partitioned_variables
+             if sel is None or v.name in sel})
+        names = struct.fieldNames()
+        spans = [(rel, int(start), int(stop))
+                 for rel, rel_spans in ranges.items()
+                 for start, stop in rel_spans]
         root = self.path
-        from .blobs import capture_blob_conf
-        blob_conf = capture_blob_conf()
+        conf = capture_blob_conf()
 
-        def read_spans(batches: Iterable[pd.DataFrame]
-                       ) -> Iterable[pd.DataFrame]:
-            for pdf in batches:
-                for rel, start, stop in pdf.itertuples(index=False):
-                    data = {}
-                    for name in names:
-                        vals = read_array_slice(f"{root}/{rel}/{name}",
-                                                int(start), int(stop),
-                                                conf=blob_conf)
-                        if vals.dtype.kind == "M":
-                            vals = vals.astype("datetime64[us]")
-                        data[name] = list(vals) if name in nd else vals
-                    yield pd.DataFrame(data)
+        def read_span(span) -> pa.RecordBatch:
+            rel, start, stop = span
+            arrays = []
+            for name in names:
+                vals = read_array_slice(f"{root}/{rel}/{name}", start,
+                                        stop, conf=conf)
+                if vals.dtype.kind == "M":
+                    vals = vals.astype("datetime64[us]")
+                arrays.append(datasource.np_to_arrow(vals))
+            return pa.RecordBatch.from_arrays(arrays, names=names)
 
-        tasks = self.spark.createDataFrame(
-            rows, "relpath string, start long, stop long")
-        return (tasks.repartition(len(rows))
-                .mapInPandas(read_spans, struct))
+        return _task_per_item(self.spark, spans, read_span, struct)
 
     def _load(self, *, filters: str | None = None,
               keep_internal: bool = False) -> DataFrame | None:
@@ -610,58 +605,15 @@ class ZarrCollection:
         """
         from pyspark.sql import Window
         from ..collection.collection import ROW_IDX
-        predicate = compile_filter(filters)
-        if not self.partitions(filters=filters):
+        relpaths = self.partitions(filters=filters)
+        if not relpaths:
             return None
-        df = self.to_df()
-        if predicate.expr is not None:
-            df = df.where(predicate.to_column())
+        df = self._scan([(self.path, rel) for rel in relpaths])
         if keep_internal:
             win = (Window.partitionBy(*self.partitioning.keys)
                    .orderBy(self.axis))
             df = df.withColumn(ROW_IDX, F.row_number().over(win) - F.lit(1))
         return df
-
-    def _zone_keys_predicate(self, relpaths: list[str],
-                             exact: bool = False):
-        """Catalyst predicate selecting exactly ``relpaths`` by their
-        partition-key values — how zone-map pruning reaches the zarr3
-        datasource (whose file pruning is driven by pushed key
-        comparisons, not an explicit path list).  Single-key layouts
-        compile to one ``isin`` (scales to large surviving sets);
-        multi-key layouts to an OR of conjunctions, skipped past a cap
-        where the predicate itself would dominate planning — the
-        row-level ``where`` filter keeps correctness either way when
-        pruning is the caller.  ``exact=True`` (time-travel: the
-        predicate IS the correctness boundary, nothing re-filters
-        below) compiles a composite-key ``isin`` past the cap instead
-        of returning None."""
-        keys = list(self.partitioning.keys)
-        decoded = [self.partitioning.decode(rel) for rel in relpaths]
-        if len(keys) == 1:
-            k = keys[0]
-            return F.col(k).isin([d[k] for d in decoded])
-        if len(decoded) > 512:
-            if not exact:
-                return None
-            # one composite string key, one isin: O(1) predicate nodes
-            # at any partition count (keys are integers, so '/'-joined
-            # values are collision-free)
-            composite = F.concat_ws(
-                "/", *[F.col(k).cast("string") for k in keys])
-            return composite.isin(
-                ["/".join(str(d[k]) for k in keys) for d in decoded])
-        clauses = []
-        for d in decoded:
-            conj = None
-            for k in keys:
-                cmp_ = F.col(k) == F.lit(d[k])
-                conj = cmp_ if conj is None else (conj & cmp_)
-            clauses.append(conj)
-        out = clauses[0]
-        for c in clauses[1:]:
-            out = out | c
-        return out
 
     def query(self, *, filters: str | None = None,
               variables: Iterable[str] | None = None,
@@ -669,23 +621,22 @@ class ZarrCollection:
               ordered: bool = True,
               at_generation: int | None = None,
               nested: bool = False) -> DataFrame | None:
-        """Pruned + projected read through the zarr3 datasource; the
-        filter string compiles to a Catalyst predicate whose partition-key
-        comparisons are pushed down into the reader.
+        """Pruned + projected read: the partition-key ``filters`` select
+        partitions from the catalog list on the driver, and exactly
+        those are scanned (``_scan``).
 
         ``where`` (data-column dialect, float literals allowed) adds
         zone-map partition skipping when the collection records
-        ``stats_columns`` — surviving partitions are re-expressed as a
-        pushed key predicate, and the exact row filter is applied on
-        top (parquet-layout parity, collection/collection.py).
+        ``stats_columns`` — only surviving partitions are scanned, and
+        the exact row filter is applied on top (parquet-layout parity,
+        collection/collection.py).
 
         ``at_generation`` reads AS OF a committed generation (parquet-
         layout parity: partition list + zone statistics from the gen-N
         snapshot, staleness-gated — see
-        ``collection.catalog.resolve_snapshot_readable``); the
-        historical partition set is pushed into the reader as a key
-        predicate."""
-        predicate = compile_filter(filters)
+        ``collection.catalog.resolve_snapshot_readable``); partitions
+        republished since are read from their retained copies in the
+        same scan."""
         sources = None
         if at_generation is not None:
             # fetch + staleness-verify the snapshot ONCE and thread it
@@ -705,7 +656,6 @@ class ZarrCollection:
             relpaths = self.partitions(filters=filters)
         if not relpaths:
             return None  # quirk Q6 parity
-        pruned = False
         if where is not None and (self.stats_columns
                                   or self.bloom_columns):
             if snap is not None:
@@ -733,17 +683,7 @@ class ZarrCollection:
                             if may_match(resolved[rel])]
                 if not kept:
                     return None
-                pruned = len(kept) < len(relpaths)
                 relpaths = kept
-        live_rels = (relpaths if sources is None
-                     else [r for r in relpaths
-                           if sources.get(r) is None])
-        retained_groups: dict[str, list[str]] = {}
-        if sources is not None:
-            for rel in relpaths:
-                base = sources.get(rel)
-                if base is not None:
-                    retained_groups.setdefault(base, []).append(rel)
         read_vars = variables
         if variables is not None and where is not None:
             # the where predicate's columns must survive the scan
@@ -751,39 +691,15 @@ class ZarrCollection:
             read_vars = sorted(
                 set(variables)
                 | compile_filter(where, allow_float=True).names)
-        parts = []
-        if live_rels:
-            ldf = self.to_df(variables=read_vars)
-            if predicate.expr is not None:
-                ldf = ldf.where(predicate.to_column())
-            if at_generation is not None or pruned:
-                # restrict the scan to exactly the resolved live set
-                # (under time travel: partitions committed OR
-                # republished after gen N must not be read) —
-                # exact=True is the correctness boundary, so the
-                # multi-key planning cap must never silently drop it
-                zp = self._zone_keys_predicate(
-                    live_rels, exact=at_generation is not None)
-                if zp is not None:
-                    ldf = ldf.where(zp)
-            parts.append(ldf)
-        for base, rels in sorted(retained_groups.items()):
-            rdf = self._retained_scan(base, read_vars)
-            if predicate.expr is not None:
-                rdf = rdf.where(predicate.to_column())
-            zp = self._zone_keys_predicate(rels, exact=True)
-            if zp is not None:
-                rdf = rdf.where(zp)
-            parts.append(rdf)
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
+        bases = sources or {}
+        df = self._scan([(bases.get(rel) or self.path, rel)
+                         for rel in relpaths], read_vars)
         if where is not None:
             df = df.where(compile_filter(where,
                                          allow_float=True).to_column())
         if ordered and self.axis in df.columns:
             if len(relpaths) == 1:
-                # one surviving partition = one reader task: an
+                # one surviving partition = one scan task: an
                 # in-partition sort IS the global order — skip the
                 # orderBy exchange (range partitioning + shuffle)
                 df = df.sortWithinPartitions(self.axis)
@@ -826,25 +742,6 @@ class ZarrCollection:
             df = nest_struct_columns(df)
         return df
 
-    def _retained_scan(self, base: str, read_vars) -> DataFrame:
-        """Datasource scan over a retained partition base
-        (``_catalog/retained/gen-N``): DATA under ``base``, collection
-        config from the live root (the ``config_root`` option — a
-        retained copy carries no ``_zcollection.json`` of its own)."""
-        from .blobs import capture_blob_conf
-        conf = capture_blob_conf()
-        reader = (self.spark.read.format("zarr3")
-                  .option("path", base)
-                  .option("config_root", self.path))
-        if conf is not None:
-            reader = reader.option("blob_conf", json.dumps(conf))
-        if read_vars is not None:
-            cols = set(read_vars) | set(self.partitioning.keys)
-            reader = reader.option("columns", ",".join(sorted(cols)))
-        df = reader.load()
-        # same pushFilters-reset guard as to_df (keys are never null)
-        return df.where(F.col(self.partitioning.keys[0]).isNotNull())
-
     def drop_partitions(self, *, filters: str | None = None) -> list[str]:
         """Delete matching partition groups + catalog update
         (``collection/base.py:599-634`` parity)."""
@@ -864,10 +761,7 @@ class ZarrCollection:
         relpaths = self.partitions(filters=filters)
         if not relpaths:
             return []
-        predicate = compile_filter(filters)
-        df = self.to_df()
-        if predicate.expr is not None:
-            df = df.where(predicate.to_column())
+        df = self._scan([(self.path, rel) for rel in relpaths])
         keys = list(self.partitioning.keys)
         var_names = [v.name for v in self.schema.partitioned_variables]
         sample = fn(df.limit(0).toPandas())
@@ -885,14 +779,12 @@ class ZarrCollection:
     def map(self, fn: Callable, schema, *,
             filters: str | None = None,
             variables: Iterable[str] | None = None) -> DataFrame | None:
-        """Per-partition pandas fn over the zarr datasource read
+        """Per-partition pandas fn over the matching partitions
         (``collection/base.py:638-696`` parity)."""
-        predicate = compile_filter(filters)
-        if not self.partitions(filters=filters):
+        relpaths = self.partitions(filters=filters)
+        if not relpaths:
             return None
-        df = self.to_df(variables=variables)
-        if predicate.expr is not None:
-            df = df.where(predicate.to_column())
+        df = self._scan([(self.path, rel) for rel in relpaths], variables)
         return df.groupBy(*self.partitioning.keys).applyInPandas(fn, schema)
 
     def repair_catalog(self) -> list[str]:

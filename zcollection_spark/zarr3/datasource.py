@@ -1,23 +1,27 @@
 """Spark Python DataSource for Zarr v3 collections (format name "zarr3").
 
-Read path: one ``InputPartition`` per collection partition (the reference's
-unit of parallelism, ``io/partition.py:235-265``); partition-key predicates
-are PUSHED DOWN (``pushFilters``) and evaluated driver-side against the
-decoded partition keys, so non-matching partitions are never listed, opened
-or read — the same listing-time pruning as the parquet path.  Column
-projection arrives via the ``columns`` option (the Python DS API has no
-prune hook yet); only requested Zarr arrays are fetched, per-variable, like
-the reference's ``wanted_paths``.
+This is the public format API:
+``spark.read.format("zarr3").option("path", root).load()`` and
+``df.write.format("zarr3")``.  ``ZarrCollection`` reads do not plan
+through it: the collection resolves its partition list on the driver
+and scans it with one ``mapInArrow`` task per partition
+(``ZarrCollection._scan``).  Both paths decode a partition with the same
+:func:`read_partition`, so the DataSource is also the differential
+reference for the collection scan.
 
-Executors return pyarrow RecordBatches built zero-copy from the chunk
-buffers, so the Python-side cost is decompress + Arrow wrap, not
-row-by-row conversion.
+Read path: one ``InputPartition`` per collection partition (the
+reference's unit of parallelism, ``io/partition.py:235-265``);
+partition-key predicates are PUSHED DOWN (``pushFilters``) and evaluated
+against the decoded partition keys, so non-matching partitions are never
+opened.  Column projection arrives via the ``columns`` option (the
+Python DS API has no prune hook); only requested Zarr arrays are
+fetched.  Partitions decode to pyarrow RecordBatches built zero-copy
+from the chunk buffers.
 """
 
 from __future__ import annotations
 
 import json
-from pathlib import Path
 from typing import Iterator, Sequence
 
 import numpy as np
@@ -45,7 +49,7 @@ def _load_config(root: str,
             partitioning_from_json(doc["partitioning"]))
 
 
-def _np_to_arrow(values: np.ndarray) -> pa.Array:
+def np_to_arrow(values: np.ndarray) -> pa.Array:
     if values.ndim == 1:
         return pa.array(values)
     # nD variable → Arrow ListArray built from flat buffer + offsets
@@ -56,25 +60,86 @@ def _np_to_arrow(values: np.ndarray) -> pa.Array:
     return pa.ListArray.from_arrays(offsets, flat)
 
 
+def scan_struct(dataset_schema: DatasetSchema, partitioning,
+                wanted: set | None = None) -> T.StructType:
+    """Spark schema of a partition scan: the partitioned variables
+    (immutables live in ``_immutable/`` and are attached by the
+    collection), narrowed to ``wanted``, then the derived partition-key
+    columns (Date year/month/…) as int64, like the parquet layout's
+    partition columns."""
+    var_map = dataset_schema.variable_map
+    fields = [f for f in dataset_schema.to_struct_type().fields
+              if not var_map[f.name].immutable
+              and (wanted is None or f.name in wanted)]
+    fields += [T.StructField(k, T.LongType()) for k in partitioning.keys
+               if k not in var_map and (wanted is None or k in wanted)]
+    return T.StructType(fields)
+
+
+def read_partition(root: str, rel: str, struct: T.StructType,
+                   dataset_schema: DatasetSchema, partitioning,
+                   conf: dict | None = None) -> pa.RecordBatch:
+    """Decode the partition group ``{root}/{rel}`` into the columns of
+    ``struct`` — the one per-partition decoder behind the DataSource
+    reader and the collection scan.  A variable declared after the
+    partition was written reads as its ``fill_value`` (the zarr
+    missing-chunk rule at array granularity); derived key columns are
+    the decoded key of ``rel``."""
+    from .core import read_array
+    group_path = f"{root}/{rel}"
+    var_map = dataset_schema.variable_map
+    derived = [f.name for f in struct.fields
+               if f.name in partitioning.keys and f.name not in var_map]
+    arrays: dict[str, pa.Array] = {}
+    length = None
+
+    def axis_length() -> int:
+        return len(read_array(f"{group_path}/{dataset_schema.axis}",
+                              conf=conf))
+
+    for field in struct.fields:
+        name = field.name
+        if name in derived:
+            continue
+        try:
+            values = read_array(f"{group_path}/{name}", conf=conf)
+        except FileNotFoundError:
+            var = var_map.get(name)
+            if var is None or var.fill_value is None:
+                raise FileNotFoundError(
+                    f"array {name!r} missing in {rel!r} and no "
+                    f"fill_value declared") from None
+            dtype = np.dtype("datetime64[us]"
+                             if var.dtype.startswith("datetime")
+                             else var.dtype)
+            values = np.full(axis_length() if length is None else length,
+                             var.fill_value, dtype=dtype)
+        if values.dtype.kind == "M":
+            values = values.astype("datetime64[us]")
+        arrays[name] = np_to_arrow(values)
+        length = len(values)
+    if derived:
+        key = partitioning.decode(rel)
+        rows = axis_length() if length is None else length
+        for name in derived:
+            arrays[name] = pa.array(np.full(rows, key[name],
+                                            dtype=np.int64))
+    names = [f.name for f in struct.fields]
+    return pa.RecordBatch.from_arrays([arrays[n] for n in names],
+                                      names=names)
+
+
 class ZarrReader(DataSourceReader):
     def __init__(self, root: str, schema: T.StructType,
-                 columns: str | None, blob_conf: dict | None = None,
-                 config_root: str | None = None):
+                 blob_conf: dict | None = None):
         self.root = root
         self.spark_schema = schema
-        # arrives via the "blob_conf" option (set by ZarrCollection):
-        # DataSource instances run in Python WORKERS, which keep the env
-        # they were born with — endpoint config must ride the plan
+        # arrives via the "blob_conf" option: DataSource instances run in
+        # Python WORKERS, which keep the env they were born with —
+        # endpoint config must ride the plan
         self.blob_conf = blob_conf
-        # config_root: scan DATA under ``root`` but read the collection
-        # config (_zcollection.json) from elsewhere — time-travel scans
-        # of ``_catalog/retained/gen-N`` partition copies, which carry
-        # no config of their own
-        self.dataset_schema, self.partitioning = _load_config(
-            config_root or root, blob_conf)
-        self.columns = ([c.strip() for c in columns.split(",")]
-                        if columns else None)
-        self._pruned: list[str] | None = None
+        self.dataset_schema, self.partitioning = _load_config(root,
+                                                              blob_conf)
 
     # -- partition-key filter pushdown ---------------------------------
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
@@ -147,72 +212,14 @@ class ZarrReader(DataSourceReader):
         if relpaths is None:
             relpaths = fs.list_partition_dirs(self.root,
                                               self.partitioning.depth)
-        out = []
-        for rel in sorted(relpaths):
-            key = self.partitioning.decode(rel)
-            if self._match(key):
-                out.append(InputPartition((rel, key)))
-        return out
+        return [InputPartition(rel) for rel in sorted(relpaths)
+                if self._match(self.partitioning.decode(rel))]
 
     # -- per-partition read (executor side) ----------------------------
     def read(self, partition: InputPartition) -> Iterator[pa.RecordBatch]:
-        from .core import read_array
-        rel, key = partition.value
-        group_path = f"{self.root}/{rel}"
-        wanted = self.columns
-        arrays: dict[str, pa.Array] = {}
-        length = None
-        var_map = self.dataset_schema.variable_map
-        for field in self.spark_schema.fields:
-            name = field.name
-            if name in self.partitioning.keys and name not in var_map:
-                continue  # derived key columns appended below
-            if name in var_map and var_map[name].immutable:
-                continue  # lives in _immutable/, attached by the caller
-            if wanted is not None and name not in wanted:
-                continue
-            array_path = f"{group_path}/{name}"
-            try:
-                values = read_array(array_path, conf=self.blob_conf)
-            except FileNotFoundError:
-                # schema-evolved variable absent from an old partition:
-                # surface the declared fill (zarr missing-chunk semantics)
-                if length is None:
-                    length = len(read_array(
-                        f"{group_path}/{self.dataset_schema.axis}",
-                        conf=self.blob_conf))
-                var = var_map.get(name)
-                if var is None or var.fill_value is None:
-                    raise FileNotFoundError(
-                        f"array {name!r} missing in {rel!r} and no "
-                        f"fill_value declared") from None
-                dtype = np.dtype("datetime64[us]"
-                                 if var.dtype.startswith("datetime")
-                                 else var.dtype)
-                values = np.full(length, var.fill_value, dtype=dtype)
-            if values.dtype.kind == "M":
-                values = values.astype("datetime64[us]")
-            arrays[name] = _np_to_arrow(values)
-            length = len(values)
-        if length is None:  # keys-only projection: length from axis array
-            axis = self.dataset_schema.axis
-            length = len(read_array(f"{group_path}/{axis}",
-                                    conf=self.blob_conf))
-        for kname in self.partitioning.keys:
-            if kname in self.dataset_schema.variable_map \
-                    and kname not in arrays and (wanted is None
-                                                 or kname in wanted):
-                arrays[kname] = _np_to_arrow(
-                    read_array(f"{group_path}/{kname}",
-                               conf=self.blob_conf))
-            elif kname not in self.dataset_schema.variable_map:
-                if wanted is None or kname in wanted:
-                    arrays[kname] = pa.array(
-                        np.full(length, key[kname], dtype=np.int64))
-        names = [f.name for f in self.spark_schema.fields
-                 if f.name in arrays]
-        yield pa.RecordBatch.from_arrays([arrays[n] for n in names],
-                                         names=names)
+        yield read_partition(self.root, partition.value, self.spark_schema,
+                             self.dataset_schema, self.partitioning,
+                             self.blob_conf)
 
 
 class ZarrCommit(WriterCommitMessage):
@@ -287,34 +294,15 @@ class ZarrDataSource(DataSource):
         return json.loads(raw) if raw else None
 
     def schema(self) -> T.StructType:
-        root = self.options.get("config_root") or self.options["path"]
-        dataset_schema, partitioning = _load_config(root,
+        dataset_schema, partitioning = _load_config(self.options["path"],
                                                     self._blob_conf())
-        # immutable (non-axis) variables live in _immutable/, not in the
-        # partition groups — the collection layer broadcast-attaches them
-        struct = T.StructType(
-            [f for f in dataset_schema.to_struct_type().fields
-             if not dataset_schema.variable_map[f.name].immutable])
         columns = self.options.get("columns")
-        wanted = ({c.strip() for c in columns.split(",")}
-                  if columns else None)
-        if wanted is not None:
-            struct = T.StructType(
-                [f for f in struct.fields if f.name in wanted])
-        # derived partition-key columns (Date year/month/…) appear as
-        # int64 columns, matching the parquet layout's partition columns
-        fields = list(struct.fields)
-        for kname in partitioning.keys:
-            if kname not in dataset_schema.variable_map:
-                if wanted is None or kname in wanted:
-                    fields.append(T.StructField(kname, T.LongType()))
-        return T.StructType(fields)
+        return scan_struct(dataset_schema, partitioning,
+                           {c.strip() for c in columns.split(",")}
+                           if columns else None)
 
     def reader(self, schema: T.StructType) -> ZarrReader:
-        return ZarrReader(self.options["path"], schema,
-                          self.options.get("columns"),
-                          self._blob_conf(),
-                          self.options.get("config_root"))
+        return ZarrReader(self.options["path"], schema, self._blob_conf())
 
     def writer(self, schema: T.StructType, overwrite: bool) -> ZarrWriter:
         return ZarrWriter(self.options["path"])
