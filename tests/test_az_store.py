@@ -658,3 +658,58 @@ def test_az_pinned_retention_is_server_side_copy(spark, seq_schema,
     coll.unpin_generation(g)
     with pytest.raises(ValueError, match="republished or dropped"):
         coll.query(at_generation=g)
+
+
+def test_az_cross_container_copy_under_bearer(az_server, az_root,
+                                              monkeypatch):
+    """A cross-container Copy Blob under bearer auth carries
+    x-ms-copy-source-authorization (the source URL has no auth of its
+    own) and checks x-ms-copy-status, exactly like a same-container
+    copy."""
+    from zcollection_spark.errors import StoreError
+    fs = _bearer_fs(az_server)
+    other = f"az://zc-{uuid.uuid4().hex[:12]}/store"
+    fs.write_text(f"{az_root}/src.txt", "x")
+    real = AzureBlobFS._request
+    sent, status = [], {}
+
+    def capture(self, method, container, key, *a, **kw):
+        headers = kw.get("headers") or {}
+        if "x-ms-copy-source" in headers:
+            sent.append(dict(headers))
+            code, hdrs, body = real(self, method, container, key, *a, **kw)
+            return code, {**hdrs, **status}, body
+        return real(self, method, container, key, *a, **kw)
+
+    monkeypatch.setattr(AzureBlobFS, "_request", capture)
+    assert fs.copy_file(f"{az_root}/src.txt", f"{other}/dst.txt")
+    assert fs.read_text(f"{other}/dst.txt") == "x"
+    assert sent[-1]["x-ms-copy-source-authorization"].startswith("Bearer ")
+    status["x-ms-copy-status"] = "pending"
+    with pytest.raises(StoreError, match="not synchronous"):
+        fs.move_file(f"{az_root}/src.txt", f"{other}/dst2.txt")
+    assert fs.exists_file(f"{az_root}/src.txt")  # never deleted
+
+
+def test_az_move_and_copy_source_vanishing_mid_copy(az_root, monkeypatch):
+    """move_file/copy_file copy first and read the copy's 404 as
+    "source missing" (False), so a source deleted by a concurrent mover
+    between any check and the copy never raises — staging's roll-forward
+    acts on that False.  The copy is the first request: no HEAD."""
+    fs = AzureBlobFS()
+    real = AzureBlobFS._request
+    sc, sk = AzureBlobFS._ck(f"{az_root}/src.txt")
+
+    def vanish(self, method, container, key, *a, **kw):
+        if "x-ms-copy-source" in (kw.get("headers") or {}):
+            real(self, "DELETE", sc, sk)
+        return real(self, method, container, key, *a, **kw)
+
+    for op in (fs.move_file, fs.copy_file):
+        fs.write_text(f"{az_root}/src.txt", "x")
+        fs.api_counts.clear()
+        monkeypatch.setattr(AzureBlobFS, "_request", vanish)
+        assert op(f"{az_root}/src.txt", f"{az_root}/dst.txt") is False
+        monkeypatch.setattr(AzureBlobFS, "_request", real)
+        assert fs.api_counts.get("head", 0) == 0
+        assert not fs.exists_file(f"{az_root}/dst.txt")

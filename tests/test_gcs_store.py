@@ -623,3 +623,27 @@ def test_gcs_pinned_retention_is_server_side_rewrite(gcs_server,
     live = sorted((r["num"], tuple(r["value"])) for r in
                   coll.query().collect())
     assert (0, (9.0, 9.0, 9.0)) in live
+
+
+def test_gcs_move_and_copy_source_vanishing_mid_copy(gcs_server, gcs_root,
+                                                     monkeypatch):
+    """move_file/copy_file rewrite first and read the rewrite's 404 as
+    "source missing" (False), so a source deleted by a concurrent mover
+    between any check and the copy never raises — staging's roll-forward
+    acts on that False.  The rewrite is the first request: no HEAD."""
+    fs = _bearer_fs(gcs_server)
+    real = GcsFS._request
+
+    def vanish(self, method, url, *a, **kw):
+        if "/rewriteTo/" in url:
+            real(self, "DELETE", url.split("/rewriteTo/")[0])
+        return real(self, method, url, *a, **kw)
+
+    for op in (fs.move_file, fs.copy_file):
+        fs.write_text(f"{gcs_root}/src.txt", "x")
+        fs.api_counts.clear()
+        monkeypatch.setattr(GcsFS, "_request", vanish)
+        assert op(f"{gcs_root}/src.txt", f"{gcs_root}/dst.txt") is False
+        monkeypatch.setattr(GcsFS, "_request", real)
+        assert fs.api_counts.get("head", 0) == 0
+        assert not fs.exists_file(f"{gcs_root}/dst.txt")

@@ -5,14 +5,22 @@ Spark itself handles bulk data I/O through Hadoop FileSystems (so ``s3a://``,
 module only covers the *small-file* metadata operations the engine needs
 driver-side: ``_zcollection.json``, ``_catalog/state.json``, ``_immutable``
 markers and partition-directory walks.  It plays the role of the reference's
-``Store`` ABC (``/root/reference/zcollection/store/base.py:42-94``) with two
-implementations:
+``Store`` ABC (``/root/reference/zcollection/store/base.py:42-94``);
+:func:`fs_for` picks the implementation by scheme:
 
 - :class:`LocalFS` — plain ``pathlib`` for ``file://`` / bare paths, with the
   reference's atomic tmp+rename write (``store/local.py:66-74``).
+- :class:`MemoryFS` — one process-wide in-memory namespace (``memory://``).
 - :class:`HadoopFS` — py4j bridge to ``org.apache.hadoop.fs.FileSystem`` for
-  any scheme the Spark runtime supports (object stores); the path-walk and
-  read/write primitives go through the JVM so no extra Python deps are needed.
+  any other scheme the Spark runtime supports.
+- :class:`_ObjectStore` — the flat-keyspace object-store contract written
+  once (exists, listing and walks, copy-first moves, CAS, the localize
+  mirror, bearer-token refresh and the REST retry loop) over three
+  transports: :class:`S3FS` (boto3; ``s3://`` and HMAC-interop ``gs://``),
+  :class:`AzureBlobFS` (Blob REST, ``az://``) and :class:`GcsFS` (JSON API,
+  service-account ``gs://``).
+- :class:`HttpFS` — read-only ``http(s)://`` over a published file manifest.
+- :class:`CountingFS` — an op-counting wrapper for budgets in benches/tests.
 
 Atomicity note: on object stores a single PUT is atomic, which is all the
 catalog swap protocol requires (see ``catalog.py``).
@@ -620,127 +628,436 @@ class CountingFS:
     reference's ``CountingProbe`` (``benches/probe.py:19-85``).
 
     Tallies the object-store op classes that dominate metadata cost at
-    scale: ``get`` (read), ``put`` (write), ``list`` (directory/walk),
-    ``head`` (exists), ``rename``, ``delete``.  Benches and tests use
-    it to assert op BUDGETS — e.g. a catalog-backed cold open is O(1)
-    GETs with zero LISTs, not a recursive store walk.
+    scale (``KINDS``); every other attribute passes through uncounted.
+    Benches and tests use it to assert op BUDGETS — e.g. a
+    catalog-backed cold open is O(1) GETs with zero LISTs, not a
+    recursive store walk.
     """
 
+    #: store method -> the op kind it is tallied under
+    KINDS = {"exists": "head", "exists_file": "head", "mtime": "head",
+             "read_text": "get", "read_bytes": "get",
+             "read_versioned": "get", "write_text": "put",
+             "write_bytes": "put", "write_if": "put", "delete": "delete",
+             "mkdirs": "mkdirs", "rename": "rename", "copy_file": "copy",
+             "list_files": "list", "list_dirs": "list",
+             "list_partition_dirs": "list"}
+
     def __init__(self, inner):
-        self.inner = inner
         from collections import Counter
+        self.inner = inner
         self.counts = Counter()
 
     def reset(self) -> None:
         self.counts.clear()
 
-    def exists(self, path: str) -> bool:
-        self.counts["head"] += 1
-        return self.inner.exists(path)
-
-    def mtime(self, path: str) -> "float | None":
-        self.counts["head"] += 1
-        probe = getattr(self.inner, "mtime", None)
-        return probe(path) if probe else None
-
-    def exists_file(self, path: str) -> bool:
-        self.counts["head"] += 1
-        checker = getattr(self.inner, "exists_file", self.inner.exists)
-        return checker(path)
-
-    def read_text(self, path: str) -> str:
-        self.counts["get"] += 1
-        return self.inner.read_text(path)
-
-    def write_text(self, path: str, data: str) -> None:
-        self.counts["put"] += 1
-        self.inner.write_text(path, data)
-
-    def read_bytes(self, path: str) -> bytes:
-        self.counts["get"] += 1
-        return self.inner.read_bytes(path)
-
-    def write_bytes(self, path: str, data: bytes) -> None:
-        self.counts["put"] += 1
-        self.inner.write_bytes(path, data)
-
-    def read_versioned(self, path: str):
-        self.counts["get"] += 1
-        return self.inner.read_versioned(path)
-
-    def write_if(self, path: str, data: str, token) -> str:
-        self.counts["put"] += 1
-        return self.inner.write_if(path, data, token)
-
-    def delete(self, path: str) -> None:
-        self.counts["delete"] += 1
-        self.inner.delete(path)
-
-    def mkdirs(self, path: str) -> None:
-        self.counts["mkdirs"] += 1
-        self.inner.mkdirs(path)
-
-    def rename(self, src: str, dst: str) -> bool:
-        self.counts["rename"] += 1
-        return self.inner.rename(src, dst)
-
-    def copy_file(self, src: str, dst: str) -> bool:
-        self.counts["copy"] += 1
-        return self.inner.copy_file(src, dst)
-
-    def list_files(self, path: str) -> list[str]:
-        self.counts["list"] += 1
-        return self.inner.list_files(path)
-
-    def list_dirs(self, path: str) -> list[str]:
-        self.counts["list"] += 1
-        return self.inner.list_dirs(path)
-
-    def list_partition_dirs(self, root: str, depth: int) -> list[str]:
-        self.counts["list"] += 1
-        return self.inner.list_partition_dirs(root, depth)
-
-    def supports_atomic_rename(self, path: str) -> bool:
-        return getattr(self.inner, "supports_atomic_rename",
-                       lambda p: True)(path)
-
     def __getattr__(self, name):
-        return getattr(self.inner, name)
+        attr = getattr(self.inner, name)
+        kind = self.KINDS.get(name)
+        if kind is None or not callable(attr):
+            return attr
+
+        def call(*args, **kwargs):
+            self.counts[kind] += 1
+            return attr(*args, **kwargs)
+        return call
 
 
-class S3FS:
-    """S3-compatible object store backend via boto3 — REAL S3 semantics:
-    a flat keyspace, atomic single-object PUT/DELETE, **no rename at
-    all** (``rename`` is CopyObject + DeleteObject, non-atomic by
-    nature), directories are pure prefix fictions.  This is the store
-    class the manifest-driven staging publish was designed for
-    (staging.py design note); ``supports_atomic_rename`` is honestly
-    False here, so every write takes the file-granular path.
+def _hidden(rel: str) -> bool:
+    """Any ``_``/``.`` component: staging, catalog and writer debris
+    that walks and mirrors skip."""
+    return any(c.startswith(("_", ".")) for c in rel.split("/"))
 
-    Mirrors the reference's moto-S3 contract surface
-    (``/root/reference/zcollection/tests/test_backends.py:49-430``,
-    ``store/obstore_store.py:27``) on boto3.
 
-    Two planes:
+def _purge_mirror(local_prefix: str, seen: set, versions: dict) -> None:
+    """Drop mirror files under ``local_prefix`` that the remote listing
+    no longer has, or a stale generation would leak into a scan."""
+    if os.path.isdir(local_prefix):
+        for dirpath, _, filenames in os.walk(local_prefix):
+            for fname in filenames:
+                full = os.path.join(dirpath, fname)
+                if full not in seen:
+                    os.remove(full)
+                    versions.pop(full, None)
 
-    - **metadata plane** (config/catalog/intents/publish): every op is a
-      direct S3 API call; ``api_counts`` tallies them so benches can
-      assert op budgets (HEAD/GET/PUT/LIST/COPY/DELETE).
-    - **bulk plane**: on a production cluster Spark reads/writes
-      ``s3a://`` natively through the Hadoop connector and this class
-      never touches row data.  When the JVM has no S3 connector (this
-      environment), ``requires_localization`` switches the collection to
-      a scratch bridge: Spark jobs write to local scratch and
-      :meth:`upload_tree` PUTs the files (returning the exact file
-      manifest — zero listing on the commit path); reads go through
-      :meth:`localize`, an ETag-validated local mirror.  The protocol
-      traffic — staging, intents, manifests, publish copies, catalog
-      PUTs, recovery — is identical in both configurations.
+
+class _ObjectStore:
+    """The flat-keyspace store contract, written once for
+    :class:`S3FS`, :class:`AzureBlobFS` and :class:`GcsFS` — the
+    reference's ``Store`` ABC (``store/base.py:42-94``) over the single
+    obstore class (``store/obstore_store.py:27-153``).
+
+    Directories are prefix fictions, single-object PUT/DELETE are
+    atomic, and there is no rename: a move is a server-side copy plus a
+    delete, so ``supports_atomic_rename`` is False and collections take
+    the manifest-driven file-granular publish.  Subclasses supply only
+    their transport primitives on ``(bucket, key)`` pairs, each of which
+    tallies its call in ``api_counts`` (HEAD/GET/PUT/LIST/COPY/DELETE):
+
+    - ``_head(b, k)`` → metadata or None (ONLY a real 404 is absent —
+      a throttle or 5xx read as "absent" would make recovery re-park a
+      published generation); ``_mtime(head)`` → epoch seconds or None
+    - ``_list_page(b, prefix, delimiter, token, limit)`` →
+      ``([(key, version, size)], [prefix], next_token or None)``
+    - ``_get(b, k)`` → ``(bytes, version)`` or None when absent
+    - ``_put(b, k, data)``; ``_put_if(b, k, data, token)`` → the new
+      version token, :class:`CommitConflictError` on a lost race
+      (``token=None`` is create-only)
+    - ``_copy(sb, sk, db, dk)`` → False ONLY when the source is missing
+    - ``_delete_object(b, k)`` (already absent is fine)
+
+    Bulk plane: on a cluster with the Hadoop connector Spark reads and
+    writes the store natively and never touches this class for row
+    data.  Without one, ``requires_localization`` switches collections
+    to a scratch bridge: Spark writes local scratch and
+    :meth:`upload_tree` PUTs the files, reads go through
+    :meth:`localize`.  The protocol traffic — staging, intents,
+    manifests, publish copies, catalog PUTs, recovery — is identical in
+    both configurations.
     """
 
-    #: Collection bulk I/O must go through the scratch bridge (no JVM
-    #: S3 connector assumed; flip off when running with hadoop-aws).
     requires_localization = True
+
+    #: bounded transient-fault retry of the REST backends (429/5xx and
+    #: connection resets), matching HttpFS
+    _RETRIES = 3
+
+    _auth_mode = "bearer"
+    _bearer: "str | None" = None
+    _bearer_exp: "float | None" = None
+    _token_provider = None
+
+    def __init__(self, scratch_dir: str | None, tag: str):
+        from collections import Counter
+        self._scratch_root = scratch_dir or os.path.join(
+            tempfile.gettempdir(), f"{tag}-{uuid.uuid4().hex[:8]}")
+        self._etags: dict[str, str] = {}  # mirror file -> version token
+        self.api_counts = Counter()
+
+    @staticmethod
+    def _bk(path: str) -> tuple[str, str]:
+        rest = path.split("://", 1)[1] if "://" in path else path
+        bucket, _, key = rest.partition("/")
+        return bucket, key.strip("/")
+
+    # -- shared REST plumbing (AzureBlobFS, GcsFS) ----------------------
+    def _bearer_token(self, force_refresh: bool = False) -> str:
+        """Current OAuth access token; provider-backed tokens refresh
+        lazily 5 minutes before expiry (and immediately on a 401)."""
+        import time
+        if self._token_provider is not None and (
+                force_refresh or self._bearer is None
+                or (self._bearer_exp is not None
+                    and time.time() > self._bearer_exp - 300)):
+            token, expires = self._token_provider()
+            self._bearer = str(token)
+            self._bearer_exp = float(expires) if expires else None
+        if not self._bearer:
+            raise StoreError(
+                f"{type(self).__name__} bearer auth has no token (the "
+                f"provider returned nothing and no static token is set)")
+        return self._bearer
+
+    def _send(self, method: str, url: str, headers: dict,
+              body: bytes | None, authorize, where: str):
+        """One HTTP request → ``(status, headers, body)``.
+
+        429/500/503 and connection resets retry with backoff — object
+        stores throttle routinely and a flaky window must not fail an
+        insert.  Other 4xx return at once for the caller to map
+        (404/409/412 mean absent/conflict, never retried), except
+        401/403, which raise — after ONE free token refresh under
+        provider-backed bearer auth that does not use up a retry slot
+        (the token may simply have expired mid-session).
+        ``authorize(headers)`` sets the Authorization header before
+        every attempt."""
+        import time
+        import urllib.error
+        import urllib.request
+        if body is not None:
+            # urllib injects a default Content-Type on bodied requests
+            # AFTER signing — set it so the signed and sent values agree
+            headers.setdefault("Content-Type", "application/octet-stream")
+        refreshed, attempt = False, 0
+        while True:
+            authorize(headers)
+            req = urllib.request.Request(url, data=body, headers=headers,
+                                         method=method)
+            try:
+                with urllib.request.urlopen(req, timeout=60) as resp:
+                    return resp.status, dict(resp.headers), resp.read()
+            except urllib.error.HTTPError as exc:
+                data = exc.read()
+                if exc.code == 401 and self._token_provider is not None \
+                        and not refreshed:
+                    refreshed = True
+                    self._bearer_token(force_refresh=True)
+                    continue
+                if exc.code in (401, 403):
+                    raise StoreError(
+                        f"{method} {where} returned {exc.code} under "
+                        f"{self._auth_mode} auth: check the credentials "
+                        f"(signature, token expiry, scopes or "
+                        f"permissions)") from exc
+                if exc.code not in (429, 500, 503) \
+                        or attempt == self._RETRIES:
+                    return exc.code, dict(exc.headers), data
+            except urllib.error.URLError as exc:
+                if attempt == self._RETRIES:
+                    raise StoreError(
+                        f"{type(self).__name__} endpoint unreachable: "
+                        f"{self._endpoint}: {exc}") from None
+            time.sleep(0.1 * (2 ** attempt))
+            attempt += 1
+
+    @staticmethod
+    def _ok(status: int, what: str) -> None:
+        if status >= 400:
+            raise StoreError(f"{what} failed: {status}")
+
+    # -- protocol surface -----------------------------------------------
+    def supports_atomic_rename(self, path: str) -> bool:
+        return False
+
+    def exists(self, path: str) -> bool:
+        """An object, or a non-empty prefix (one-key LIST on a miss)."""
+        bucket, key = self._bk(path)
+        if not key or self._head(bucket, key) is not None:
+            return True
+        objects, prefixes, _ = self._list_page(bucket, key + "/", limit=1)
+        return bool(objects or prefixes)
+
+    def exists_file(self, path: str) -> bool:
+        """Existence of a single OBJECT: one HEAD, no prefix LIST —
+        per-file publish checks use this, since ``exists`` pays a LIST
+        on every miss."""
+        return self._head(*self._bk(path)) is not None
+
+    def mtime(self, path: str) -> "float | None":
+        head = self._head(*self._bk(path))
+        return None if head is None else self._mtime(head)
+
+    def read_bytes(self, path: str) -> bytes:
+        got = self._get(*self._bk(path))
+        if got is None:
+            raise FileNotFoundError(path)
+        return got[0]
+
+    def read_text(self, path: str) -> str:
+        return self.read_bytes(path).decode("utf-8")
+
+    def write_bytes(self, path: str, data: bytes) -> None:
+        self._put(*self._bk(path), data)
+
+    def write_text(self, path: str, data: str) -> None:
+        self.write_bytes(path, data.encode("utf-8"))
+
+    def read_versioned(self, path: str) -> tuple[str | None, str | None]:
+        """``(text, version)`` — the store's native version token
+        (ETag / generation) for :meth:`write_if`."""
+        got = self._get(*self._bk(path))
+        return (None, None) if got is None else \
+            (got[0].decode("utf-8"), got[1])
+
+    def write_if(self, path: str, data: str, token: str | None) -> str:
+        """True server-side compare-and-swap: one conditional PUT, no
+        locks, any number of writers.  Returns the new version token
+        straight from the PUT response (no separate read that a racing
+        takeover could poison)."""
+        return self._put_if(*self._bk(path), data.encode("utf-8"), token)
+
+    def delete(self, path: str) -> None:
+        """The object at ``path`` and everything under its prefix."""
+        bucket, key = self._bk(path)
+        doomed = [key] if self._head(bucket, key) is not None else []
+        doomed += [k for k, _, _ in self._iter_keys(bucket, key + "/")]
+        self._delete_keys(bucket, doomed)
+
+    def _delete_keys(self, bucket: str, keys: list[str]) -> None:
+        for key in keys:
+            self._delete_object(bucket, key)
+
+    def mkdirs(self, path: str) -> None:
+        pass  # directories are prefix fictions on a flat keyspace
+
+    def _move(self, sb: str, sk: str, db: str, dk: str) -> bool:
+        """Copy then delete: two atomic ops with a visible window
+        between them; the staging protocol's exists-checks make a crash
+        in the window recoverable.  False when the source is missing.
+        A failed source delete raises — silence would leave BOTH src
+        and dst visible as duplicate data."""
+        if not self._copy(sb, sk, db, dk):
+            return False
+        try:
+            self._delete_object(sb, sk)
+        except StoreError as exc:
+            raise StoreError(f"{exc}: the source blob survives the copy; "
+                             f"re-run the move") from None
+        return True
+
+    def move_file(self, src: str, dst: str) -> bool:
+        """Single-object move where the CALLER has already done any
+        dst-exists check: one server-side copy + one delete, no
+        HEAD/LIST (the publish hot path).  The copy goes first and a
+        missing source reads as False — the signal staging's
+        roll-forward acts on when a concurrent mover got there first;
+        any other fault raises."""
+        return self._move(*self._bk(src), *self._bk(dst))
+
+    def copy_file(self, src: str, dst: str) -> bool:
+        """Non-destructive server-side copy (bytes never leave the
+        store; retention copies pinned partitions with it).  False
+        ONLY for a missing source."""
+        return self._copy(*self._bk(src), *self._bk(dst))
+
+    def rename(self, src: str, dst: str) -> bool:
+        """Copy+delete move of one object or a whole prefix; False if
+        dst exists or src is absent."""
+        if self.exists(dst):
+            return False
+        (sb, sk), (db, dk) = self._bk(src), self._bk(dst)
+        if self._head(sb, sk) is not None:
+            return self._move(sb, sk, db, dk)
+        keys = [k for k, _, _ in self._iter_keys(sb, sk + "/")]
+        for key in keys:
+            self._move(sb, key, db, dk + key[len(sk):])
+        return bool(keys)
+
+    def _iter_keys(self, bucket: str, prefix: str):
+        """All ``(key, version, size)`` under ``prefix`` — flat
+        paginated LIST, O(n/page) round trips, never a per-directory
+        walk."""
+        token = None
+        while True:
+            objects, _, token = self._list_page(bucket, prefix, token=token)
+            yield from objects
+            if not token:
+                return
+
+    def _delimited(self, path: str) -> tuple[list[str], list[str]]:
+        bucket, key = self._bk(path)
+        prefix = key + "/" if key else ""
+        files, dirs, token = [], set(), None
+        while True:
+            objects, prefixes, token = self._list_page(
+                bucket, prefix, delimiter="/", token=token)
+            files += [k[len(prefix):] for k, _, _ in objects if k != prefix]
+            dirs.update(p[len(prefix):].rstrip("/") for p in prefixes)
+            if not token:
+                return sorted(files), sorted(dirs)
+
+    def list_files(self, path: str) -> list[str]:
+        return self._delimited(path)[0]
+
+    def list_dirs(self, path: str) -> list[str]:
+        return self._delimited(path)[1]
+
+    def _rel_keys(self, root: str) -> list[str]:
+        bucket, base = self._bk(root)
+        start = len(base) + 1 if base else 0
+        return [k[start:] for k, _, _ in
+                self._iter_keys(bucket, base + "/" if base else "")]
+
+    def walk_files(self, root: str) -> list[str]:
+        """Staging fast path (staging._walk_files): ONE flat LIST of the
+        prefix instead of O(dirs) recursive listings; hidden components
+        skipped to match the recursive walker's contract."""
+        return sorted(rel for rel in self._rel_keys(root)
+                      if not _hidden(rel))
+
+    def list_partition_dirs(self, root: str, depth: int) -> list[str]:
+        out = set()
+        for rel in self._rel_keys(root):
+            comps = rel.split("/")
+            if len(comps) > depth and not _hidden(rel) \
+                    and all("=" in c for c in comps[:depth]):
+                out.add("/".join(comps[:depth]))
+        return sorted(out)
+
+    # -- bulk bridge (no-JVM-connector configurations only) -------------
+    def new_scratch_dir(self) -> str:
+        path = os.path.join(self._scratch_root, "w", uuid.uuid4().hex)
+        os.makedirs(path, exist_ok=True)
+        return path
+
+    def upload_tree(self, local_dir: str, remote_dir: str) -> list[str]:
+        """PUT every non-hidden file under ``local_dir`` to the remote
+        prefix and remove ``local_dir``; returns the relative file list
+        — the writer-side manifest that lets the staged publish skip
+        listing entirely."""
+        bucket, base = self._bk(remote_dir)
+        uploaded: list[str] = []
+        for dirpath, dirnames, filenames in os.walk(local_dir):
+            dirnames[:] = [d for d in dirnames
+                           if not d.startswith(("_", "."))]
+            for fname in filenames:
+                if fname.startswith(("_", ".")):
+                    continue
+                full = os.path.join(dirpath, fname)
+                rel = os.path.relpath(full, local_dir).replace(os.sep, "/")
+                with open(full, "rb") as fh:
+                    self._put(bucket, f"{base}/{rel}" if base else rel,
+                              fh.read())
+                uploaded.append(rel)
+        shutil.rmtree(local_dir, ignore_errors=True)
+        return sorted(uploaded)
+
+    def localize(self, root: str,
+                 relpaths: "list[str] | None" = None) -> str:
+        """Version-validated local mirror of ``root`` (or just
+        ``relpaths`` under it) for Spark to read; returns the mirror
+        base dir.  Objects whose version token (ETag / generation) is
+        unchanged are never re-downloaded; objects that vanished
+        remotely are removed from the mirror so a stale generation can
+        never leak into a scan."""
+        bucket, base = self._bk(root)
+        mirror = os.path.join(self._scratch_root, "r", bucket,
+                              base.replace("/", "_"))
+        for rel in relpaths if relpaths is not None else [""]:
+            rkey = f"{base}/{rel}".strip("/") if rel else base
+            seen = set()
+            for key, version, _ in self._iter_keys(
+                    bucket, rkey + "/" if rkey else ""):
+                krel = key[len(base) + 1:] if base else key
+                if rel == "" and _hidden(krel):
+                    continue
+                local = os.path.join(mirror, *krel.split("/"))
+                seen.add(local)
+                if self._etags.get(local) == version \
+                        and os.path.exists(local):
+                    continue
+                os.makedirs(os.path.dirname(local), exist_ok=True)
+                with open(local, "wb") as fh:
+                    fh.write(self.read_bytes(f"{bucket}/{key}"))
+                self._etags[local] = version
+            _purge_mirror(os.path.join(mirror, *rel.split("/"))
+                          if rel else mirror, seen, self._etags)
+        return mirror
+
+
+def _s3_missing(exc) -> bool:
+    """A botocore error that means "no such object" (ONLY a 404 — a
+    throttle, 5xx or 403 must raise, not masquerade as absence)."""
+    status, code = _s3_error(exc)
+    return status == 404 or code in ("404", "NoSuchKey", "NotFound")
+
+
+def _s3_error(exc) -> tuple:
+    """``(HTTP status, error code)`` of a botocore error."""
+    resp = getattr(exc, "response", None) or {}
+    return (resp.get("ResponseMetadata", {}).get("HTTPStatusCode"),
+            resp.get("Error", {}).get("Code", ""))
+
+
+class S3FS(_ObjectStore):
+    """S3-compatible object store via boto3 — real S3 semantics (see
+    :class:`_ObjectStore`); mirrors the reference's moto-S3 contract
+    surface (``/root/reference/zcollection/tests/test_backends.py:
+    49-430``, ``store/obstore_store.py:27``).  Serves ``s3://`` and,
+    through the XML interoperability API with HMAC keys, ``gs://``.
+    Deletes go out as batched DeleteObjects and copies past the 5 GiB
+    CopyObject limit as multipart UploadPartCopy.
+    """
 
     def __init__(self, endpoint_url: str | None = None,
                  region: str | None = None,
@@ -748,7 +1065,7 @@ class S3FS:
                  access_key: str | None = None,
                  secret_key: str | None = None):
         import boto3  # optional dep, import-gated (env ships it)
-        from collections import Counter
+        super().__init__(scratch_dir, "zcs3")
         kwargs = {}
         if access_key:
             # explicit creds (shipped plan config in Python workers);
@@ -760,45 +1077,20 @@ class S3FS:
             endpoint_url=endpoint_url or os.environ.get("AWS_ENDPOINT_URL"),
             region_name=region or os.environ.get("AWS_REGION", "us-east-1"),
             **kwargs)
-        self._scratch_root = scratch_dir or os.path.join(
-            tempfile.gettempdir(), f"zcs3-{uuid.uuid4().hex[:8]}")
-        self._etags: dict[str, str] = {}
-        self.api_counts = Counter()
-
-    # -- path helpers ---------------------------------------------------
-    @staticmethod
-    def _bk(path: str) -> tuple[str, str]:
-        rest = path[len("s3://"):] if path.startswith("s3://") else \
-            path.split("://", 1)[1]
-        bucket, _, key = rest.partition("/")
-        return bucket, key.strip("/")
-
-    def mtime(self, path: str) -> "float | None":
-        bucket, key = self._bk(path)
-        head = self._head(bucket, key)
-        lm = (head or {}).get("LastModified")
-        return lm.timestamp() if lm is not None else None
 
     def _head(self, bucket: str, key: str):
         self.api_counts["head"] += 1
         try:
             return self._client.head_object(Bucket=bucket, Key=key)
         except self._client.exceptions.ClientError as exc:
-            # ONLY a 404 means absent.  A throttle/5xx/403 answered as
-            # "absent" would make recovery re-run phase-1 parking on a
-            # published generation and wedge the partition — transient
-            # faults must surface, not masquerade as missing objects.
-            status = exc.response.get("ResponseMetadata", {}) \
-                .get("HTTPStatusCode")
-            code = exc.response.get("Error", {}).get("Code", "")
-            if status == 404 or code in ("404", "NoSuchKey", "NotFound"):
+            if _s3_missing(exc):
                 return None
+            status, code = _s3_error(exc)
             if status == 403 or code in ("403", "AccessDenied"):
                 # S3 answers HEAD-on-missing-key with 403 when the
                 # credentials lack s3:ListBucket — indistinguishable
-                # from "forbidden", so surface a CLEAR permissions
-                # error instead of either guessing "absent" (corrupts
-                # recovery) or a raw ClientError (ADVICE r5)
+                # from "forbidden", so name the permission instead of
+                # guessing "absent" (which corrupts recovery)
                 raise StoreError(
                     f"HEAD s3://{bucket}/{key} returned 403: the "
                     f"credentials may lack s3:ListBucket (S3 reports "
@@ -808,170 +1100,80 @@ class S3FS:
                     f"forbidden") from exc
             raise
 
-    def _list_page(self, bucket: str, **kwargs):
+    @staticmethod
+    def _mtime(head) -> "float | None":
+        lm = head.get("LastModified")
+        return lm.timestamp() if lm is not None else None
+
+    def _list_page(self, bucket: str, prefix: str,
+                   delimiter: str | None = None,
+                   token: str | None = None, limit: int | None = None):
         self.api_counts["list"] += 1
-        return self._client.list_objects_v2(Bucket=bucket, **kwargs)
+        kwargs = {"Prefix": prefix}
+        for name, value in (("Delimiter", delimiter),
+                            ("ContinuationToken", token),
+                            ("MaxKeys", limit)):
+            if value:
+                kwargs[name] = value
+        page = self._client.list_objects_v2(Bucket=bucket, **kwargs)
+        return ([(o["Key"], o["ETag"], o["Size"])
+                 for o in page.get("Contents", ())],
+                [p["Prefix"] for p in page.get("CommonPrefixes", ())],
+                page.get("NextContinuationToken")
+                if page.get("IsTruncated") else None)
 
-    def _iter_keys(self, bucket: str, prefix: str):
-        """All (key, etag, size) under ``prefix`` — flat paginated LIST;
-        O(n/1000) round-trips, never a per-directory walk."""
-        token = None
-        while True:
-            kwargs = {"Prefix": prefix}
-            if token:
-                kwargs["ContinuationToken"] = token
-            page = self._list_page(bucket, **kwargs)
-            for obj in page.get("Contents", ()):
-                yield obj["Key"], obj["ETag"], obj["Size"]
-            if not page.get("IsTruncated"):
-                return
-            token = page.get("NextContinuationToken")
-
-    # -- protocol surface ----------------------------------------------
-    def supports_atomic_rename(self, path: str) -> bool:
-        return False
-
-    def exists(self, path: str) -> bool:
-        bucket, key = self._bk(path)
-        if not key:
-            return True
-        if self._head(bucket, key) is not None:
-            return True
-        page = self._list_page(bucket, Prefix=key + "/", MaxKeys=1)
-        return bool(page.get("KeyCount"))
-
-    def exists_file(self, path: str) -> bool:
-        """Existence of a single OBJECT: one HEAD, no prefix LIST.
-        ``exists`` must also answer for directory fictions, which costs
-        a LIST on every miss — per-file publish checks use this instead
-        (the dominant saving on the commit path: one LIST per staged
-        file at scale)."""
-        bucket, key = self._bk(path)
-        return self._head(bucket, key) is not None
-
-    def read_text(self, path: str) -> str:
-        return self.read_bytes(path).decode("utf-8")
-
-    def read_bytes(self, path: str) -> bytes:
-        bucket, key = self._bk(path)
+    def _get(self, bucket: str, key: str):
         self.api_counts["get"] += 1
         try:
             resp = self._client.get_object(Bucket=bucket, Key=key)
         except self._client.exceptions.NoSuchKey:
-            raise FileNotFoundError(path) from None
-        return resp["Body"].read()
+            return None
+        return resp["Body"].read(), resp["ETag"]
 
-    def write_text(self, path: str, data: str) -> None:
-        self.write_bytes(path, data.encode("utf-8"))
-
-    def write_bytes(self, path: str, data: bytes) -> None:
-        bucket, key = self._bk(path)
+    def _put(self, bucket: str, key: str, data: bytes) -> None:
         self.api_counts["put"] += 1
         self._client.put_object(Bucket=bucket, Key=key, Body=data)
 
-    def read_versioned(self, path: str) -> tuple[str | None, str | None]:
-        """``(text, ETag)`` — the ETag is S3's native version token for
-        :meth:`write_if`'s conditional PUT."""
-        bucket, key = self._bk(path)
-        self.api_counts["get"] += 1
-        try:
-            resp = self._client.get_object(Bucket=bucket, Key=key)
-        except self._client.exceptions.NoSuchKey:
-            return None, None
-        return resp["Body"].read().decode("utf-8"), resp["ETag"]
-
-    def write_if(self, path: str, data: str, token: str | None) -> str:
-        """True server-side compare-and-swap: conditional PUT with
-        ``If-Match`` (update) / ``If-None-Match: *`` (create-only) —
-        no locks, one API call, scales to any number of writers.
-        Returns the new version's ETag straight from the PUT response
-        (no separate read that a racing takeover could poison)."""
+    def _put_if(self, bucket: str, key: str, data: bytes,
+                token: str | None) -> str:
+        """``If-Match`` (update) / ``If-None-Match: *`` (create-only)."""
         from botocore.exceptions import ClientError
-        bucket, key = self._bk(path)
-        kwargs = ({"IfNoneMatch": "*"} if token is None
-                  else {"IfMatch": token})
+        cond = ({"IfNoneMatch": "*"} if token is None
+                else {"IfMatch": token})
         self.api_counts["put"] += 1
         try:
             return self._client.put_object(
-                Bucket=bucket, Key=key,
-                Body=data.encode("utf-8"), **kwargs)["ETag"]
+                Bucket=bucket, Key=key, Body=data, **cond)["ETag"]
         except ClientError as exc:
-            code = exc.response.get("Error", {}).get("Code", "")
+            code = _s3_error(exc)[1]
             if code in ("PreconditionFailed", "ConditionalRequestConflict",
                         "412"):
                 raise CommitConflictError(
-                    f"{path}: conditional PUT lost the race "
+                    f"s3://{bucket}/{key}: conditional PUT lost the race "
                     f"({code})") from None
             raise
 
-    def delete(self, path: str) -> None:
-        bucket, key = self._bk(path)
-        doomed = [key] if self._head(bucket, key) is not None else []
-        doomed += [k for k, _, _ in self._iter_keys(bucket, key + "/")]
-        for i in range(0, len(doomed), 1000):
+    def _delete_object(self, bucket: str, key: str) -> None:
+        self.api_counts["delete"] += 1
+        self._client.delete_object(Bucket=bucket, Key=key)
+
+    def _delete_keys(self, bucket: str, keys: list[str]) -> None:
+        for i in range(0, len(keys), 1000):
             self.api_counts["delete"] += 1
             self._client.delete_objects(
                 Bucket=bucket,
-                Delete={"Objects": [{"Key": k}
-                                    for k in doomed[i:i + 1000]],
+                Delete={"Objects": [{"Key": k} for k in keys[i:i + 1000]],
                         "Quiet": True})
 
-    def mkdirs(self, path: str) -> None:
-        pass  # directories are prefix fictions on a flat keyspace
-
-    def _move_object(self, sb: str, sk: str, db: str, dk: str) -> None:
-        # the S3 "rename": CopyObject then DeleteObject — two atomic ops
-        # with a visible window between them; the staging protocol's
-        # exists-checks are what make crashes in the window recoverable
-        self.api_counts["copy"] += 1
-        self._client.copy_object(Bucket=db, Key=dk,
-                                 CopySource={"Bucket": sb, "Key": sk})
-        self.api_counts["delete"] += 1
-        self._client.delete_object(Bucket=sb, Key=sk)
-
-    def rename(self, src: str, dst: str) -> bool:
-        """Copy+delete move; False if dst exists or src is absent."""
-        if self.exists(dst):
-            return False
-        sb, sk = self._bk(src)
-        db, dk = self._bk(dst)
-        if self._head(sb, sk) is not None:  # single object
-            self._move_object(sb, sk, db, dk)
-            return True
-        keys = [k for k, _, _ in self._iter_keys(sb, sk + "/")]
-        if not keys:
-            return False
-        for k in keys:
-            self._move_object(sb, k, db, dk + k[len(sk):])
-        return True
-
-    def move_file(self, src: str, dst: str) -> bool:
-        """Single-object move where the CALLER has already done any
-        dst-exists check: exactly one CopyObject + one DeleteObject, no
-        redundant HEAD/LIST round-trips.  The publish hot path uses this
-        — per-file metadata cost drops from ~7 API calls to ~4, which is
-        the commit-path currency at large file counts.  False when the
-        source object is missing."""
-        sb, sk = self._bk(src)
-        db, dk = self._bk(dst)
+    def _copy(self, sb: str, sk: str, db: str, dk: str) -> bool:
         self.api_counts["copy"] += 1
         try:
             self._client.copy_object(Bucket=db, Key=dk,
                                      CopySource={"Bucket": sb, "Key": sk})
         except self._client.exceptions.ClientError as exc:
-            # False ONLY for a missing source (the _head rule, ADVICE
-            # r5): a throttle/5xx/403 returned as "missing" would
-            # surface in staging recovery as the misleading "staged
-            # data incomplete, cannot roll forward" — transient faults
-            # must raise, not masquerade as absence.
-            status = exc.response.get("ResponseMetadata", {}) \
-                .get("HTTPStatusCode")
-            code = exc.response.get("Error", {}).get("Code", "")
-            if status == 404 or code in ("404", "NoSuchKey", "NotFound"):
+            if _s3_missing(exc):
                 return False
             raise
-        self.api_counts["delete"] += 1
-        self._client.delete_object(Bucket=sb, Key=sk)
         return True
 
     #: single-call CopyObject ceiling (the documented S3 limit is
@@ -982,36 +1184,19 @@ class S3FS:
     _COPY_PART_SIZE = 1024 ** 3
 
     def copy_file(self, src: str, dst: str) -> bool:
-        """Non-destructive server-side copy (bytes never leave S3;
-        retention copies of pinned partitions use this instead of a
-        driver byte round-trip): one CopyObject up to the documented
-        5 GiB single-call limit, multipart UploadPartCopy with ranged
-        parts past it — a pinned partition holding a >5 GiB part-file
-        must retain, not fail every publish.  Same missing-source
-        contract as ``move_file``."""
-        sb, sk = self._bk(src)
-        db, dk = self._bk(dst)
+        """One CopyObject up to the 5 GiB single-call limit, multipart
+        UploadPartCopy with ranged parts past it — a pinned partition
+        holding a >5 GiB part-file must retain, not fail every publish.
+        False ONLY for a missing source, mid-copy included."""
+        (sb, sk), (db, dk) = self._bk(src), self._bk(dst)
         head = self._head(sb, sk)
         if head is None:
             return False
         size = int(head.get("ContentLength", 0))
         if size <= self._COPY_SINGLE_MAX:
-            self.api_counts["copy"] += 1
-            try:
-                self._client.copy_object(Bucket=db, Key=dk,
-                                         CopySource={"Bucket": sb,
-                                                     "Key": sk})
-            except self._client.exceptions.ClientError as exc:
-                status = exc.response.get("ResponseMetadata", {}) \
-                    .get("HTTPStatusCode")
-                code = exc.response.get("Error", {}).get("Code", "")
-                if status == 404 or code in ("404", "NoSuchKey",
-                                             "NotFound"):
-                    return False
-                raise
-            return True
-        mp = self._client.create_multipart_upload(Bucket=db, Key=dk)
-        upload_id = mp["UploadId"]
+            return self._copy(sb, sk, db, dk)
+        upload_id = self._client.create_multipart_upload(
+            Bucket=db, Key=dk)["UploadId"]
         try:
             parts = []
             for i, start in enumerate(
@@ -1031,147 +1216,10 @@ class S3FS:
             # abort so the incomplete upload does not bill forever
             self._client.abort_multipart_upload(
                 Bucket=db, Key=dk, UploadId=upload_id)
-            # the missing-source contract holds MID-copy too: a source
-            # vanishing between the HEAD and an upload_part_copy must
-            # surface as False (the caller's concurrent-mutation
-            # signal), not a raw botocore error
-            resp = getattr(exc, "response", None) or {}
-            status = resp.get("ResponseMetadata", {}) \
-                .get("HTTPStatusCode")
-            code = resp.get("Error", {}).get("Code", "")
-            if status == 404 or code in ("404", "NoSuchKey", "NotFound"):
+            if _s3_missing(exc):
                 return False
             raise
         return True
-
-    def _delimited(self, path: str) -> tuple[list[str], list[str]]:
-        bucket, key = self._bk(path)
-        prefix = key + "/" if key else ""
-        files, dirs, token = [], [], None
-        while True:
-            kwargs = {"Prefix": prefix, "Delimiter": "/"}
-            if token:
-                kwargs["ContinuationToken"] = token
-            page = self._list_page(bucket, **kwargs)
-            files += [obj["Key"][len(prefix):]
-                      for obj in page.get("Contents", ())
-                      if obj["Key"] != prefix]
-            dirs += [cp["Prefix"][len(prefix):].rstrip("/")
-                     for cp in page.get("CommonPrefixes", ())]
-            if not page.get("IsTruncated"):
-                return sorted(files), sorted(dirs)
-            token = page.get("NextContinuationToken")
-
-    def list_files(self, path: str) -> list[str]:
-        return self._delimited(path)[0]
-
-    def list_dirs(self, path: str) -> list[str]:
-        return self._delimited(path)[1]
-
-    def _rel_keys(self, root: str):
-        bucket, base = self._bk(root)
-        start = len(base) + 1 if base else 0
-        for key, etag, size in self._iter_keys(bucket,
-                                               base + "/" if base else ""):
-            yield key[start:], etag, size
-
-    def walk_files(self, root: str) -> list[str]:
-        """Staging fast path (staging._walk_files): ONE flat LIST of the
-        prefix instead of O(dirs) recursive listings; hidden components
-        skipped to match the recursive walker's contract."""
-        return sorted(
-            rel for rel, _, _ in self._rel_keys(root)
-            if not any(c.startswith(("_", "."))
-                       for c in rel.split("/")))
-
-    def list_partition_dirs(self, root: str, depth: int) -> list[str]:
-        out = set()
-        for rel, _, _ in self._rel_keys(root):
-            comps = rel.split("/")
-            if len(comps) <= depth:
-                continue
-            head = comps[:depth]
-            if any(c.startswith(("_", ".")) for c in comps) \
-                    or not all("=" in c for c in head):
-                continue
-            out.add("/".join(head))
-        return sorted(out)
-
-    # -- bulk bridge (no-JVM-connector configurations only) -------------
-    def new_scratch_dir(self) -> str:
-        path = os.path.join(self._scratch_root, "w", uuid.uuid4().hex)
-        os.makedirs(path, exist_ok=True)
-        return path
-
-    def upload_tree(self, local_dir: str, remote_dir: str) -> list[str]:
-        """PUT every non-hidden file under ``local_dir`` to the remote
-        prefix; returns the relative file list — the writer-side manifest
-        that lets the staged publish skip listing entirely."""
-        bucket, base = self._bk(remote_dir)
-        uploaded: list[str] = []
-        for dirpath, dirnames, filenames in os.walk(local_dir):
-            dirnames[:] = [d for d in dirnames
-                           if not d.startswith(("_", "."))]
-            for fname in filenames:
-                if fname.startswith(("_", ".")):
-                    continue
-                full = os.path.join(dirpath, fname)
-                rel = os.path.relpath(full, local_dir).replace(os.sep, "/")
-                self.api_counts["put"] += 1
-                with open(full, "rb") as fh:
-                    self._client.put_object(Bucket=bucket,
-                                            Key=f"{base}/{rel}",
-                                            Body=fh.read())
-                uploaded.append(rel)
-        shutil.rmtree(local_dir, ignore_errors=True)
-        return sorted(uploaded)
-
-    def localize(self, root: str,
-                 relpaths: "list[str] | None" = None) -> str:
-        """ETag-validated local mirror of ``root`` (or just ``relpaths``
-        under it) for Spark to read; returns the mirror base dir.
-
-        Unchanged objects (same ETag) are never re-downloaded; objects
-        that vanished remotely are removed from the mirror so a stale
-        generation can never leak into a scan.  This bridge exists for
-        connector-less environments — with hadoop-aws on the cluster,
-        reads are direct ``s3a://`` scans and this is never called.
-        """
-        bucket, base = self._bk(root)
-        mirror = os.path.join(self._scratch_root, "r", bucket,
-                              base.replace("/", "_"))
-        prefixes = relpaths if relpaths is not None else [""]
-        for rel in prefixes:
-            remote = f"{root}/{rel}" if rel else root
-            rb, rkey = self._bk(remote)
-            seen = set()
-            for key, etag, _ in self._iter_keys(
-                    bucket, rkey + "/" if rkey else ""):
-                krel = key[len(base) + 1:] if base else key
-                if rel == "" and any(c.startswith(("_", "."))
-                                     for c in krel.split("/")):
-                    continue
-                local = os.path.join(mirror, *krel.split("/"))
-                seen.add(local)
-                if self._etags.get(local) == etag and os.path.exists(local):
-                    continue
-                os.makedirs(os.path.dirname(local), exist_ok=True)
-                self.api_counts["get"] += 1
-                obj = self._client.get_object(Bucket=bucket, Key=key)
-                with open(local, "wb") as fh:
-                    fh.write(obj["Body"].read())
-                self._etags[local] = etag
-            # drop mirror files whose remote object is gone
-            local_prefix = os.path.join(mirror, *rel.split("/")) \
-                if rel else mirror
-            if os.path.isdir(local_prefix):
-                for dirpath, _, filenames in os.walk(local_prefix):
-                    for fname in filenames:
-                        full = os.path.join(dirpath, fname)
-                        if full not in seen:
-                            os.remove(full)
-                            self._etags.pop(full, None)
-        return mirror
 
 
 #: Name of the published file manifest an HTTP(S) store requires —
@@ -1436,17 +1484,9 @@ class HttpFS:
                 if etag:
                     self._etags[local] = etag
             # a republished partition renames its files: purge mirror
-            # files the manifest no longer lists, or a stale generation
-            # would leak into the scan alongside the new one
-            local_prefix = os.path.join(mirror, *rel.split("/")) \
-                if rel else mirror
-            if os.path.isdir(local_prefix):
-                for dirpath, _, filenames in os.walk(local_prefix):
-                    for fname in filenames:
-                        full = os.path.join(dirpath, fname)
-                        if full not in seen:
-                            os.remove(full)
-                            self._etags.pop(full, None)
+            # files the manifest no longer lists
+            _purge_mirror(os.path.join(mirror, *rel.split("/"))
+                          if rel else mirror, seen, self._etags)
         return mirror
 
     # -- writes: refused ------------------------------------------------
@@ -1457,18 +1497,6 @@ class HttpFS:
 
     write_text = write_bytes = write_if = delete = move_file = \
         rename = upload_tree = new_scratch_dir = _read_only
-
-
-_HTTP_FS = None
-_HTTP_FS_LOCK = threading.Lock()
-
-
-#: One S3FS per (endpoint, region) — the client, the scratch root, and
-#: the ETag-validated localize mirror are all reusable; a fresh instance
-#: per fs_for call would re-download every mirrored object for each
-#: Collection handle on the same store.
-_S3_CACHE: dict = {}
-_S3_CACHE_LOCK = threading.Lock()
 
 
 def msi_token_provider(resource: str = "https://storage.azure.com/",
@@ -1509,53 +1537,37 @@ def msi_token_provider(resource: str = "https://storage.azure.com/",
     return provider
 
 
-class AzureBlobFS:
+class AzureBlobFS(_ObjectStore):
     """Azure Blob Storage backend speaking the public Blob REST API
     directly (urllib + SharedKey request signing — no SDK dependency;
     the auth scheme and the canonical string-to-sign are the documented
-    public protocol).  Closes the last untested store scheme: the
-    reference speaks ``az://`` via obstore
+    public protocol).  The reference speaks ``az://`` via obstore
     (``/root/reference/zcollection/store/obstore_store.py:27``,
     ``store/factory.py:22-79``).
 
-    Same two-plane contract as :class:`S3FS`:
-
-    - **metadata plane**: HEAD = Get Blob Properties, GET/PUT/DELETE
-      blob, List Blobs (``restype=container&comp=list`` with
-      prefix/delimiter, marker-paginated), Copy Blob
-      (``x-ms-copy-source``) + Delete for the rename fiction, and a
-      TRUE server-side compare-and-swap via conditional PUT
-      (``If-Match`` / ``If-None-Match: *`` — Azure ETags), which is
-      everything the CAS catalog commit needs.
-    - **bulk plane**: with ``hadoop-azure`` on the cluster Spark scans
-      ``abfss://`` natively; without a JVM connector (this
-      environment) ``requires_localization`` routes bulk I/O through
-      the scratch bridge (:meth:`upload_tree` / ETag-validated
-      :meth:`localize`) exactly like S3.
-
-    Rename is copy+delete (non-atomic — ``az`` is in
-    ``_NON_ATOMIC_RENAME_SCHEMES``), so collections on az:// take the
-    manifest-driven file-granular publish path.  Copy Blob is
-    synchronous within an account for block blobs; a ``pending`` copy
-    status raises rather than silently losing the move.
+    Transport for :class:`_ObjectStore`: HEAD = Get Blob Properties,
+    GET/PUT/DELETE blob, List Blobs (``restype=container&comp=list``,
+    marker-paginated), Copy Blob (``x-ms-copy-source``; synchronous
+    within an account for block blobs — a ``pending`` status raises
+    rather than racing the move's delete), and compare-and-swap via
+    conditional Put Blob (``If-Match`` / ``If-None-Match: *``).
 
     Configuration (env or constructor): ``AZURE_STORAGE_ACCOUNT`` plus
     ONE of ``AZURE_STORAGE_KEY`` (base64 account key → SharedKey
-    header signing) or ``AZURE_STORAGE_SAS_TOKEN`` (a SAS query
-    string → query-parameter auth, the scoped/expiring grant;
-    :meth:`generate_container_sas` mints one from an account key);
+    header signing), ``AZURE_STORAGE_SAS_TOKEN`` (a SAS query string
+    → query-parameter auth, the scoped/expiring grant;
+    :meth:`generate_container_sas` mints one from an account key) or
+    ``AZURE_STORAGE_BEARER_TOKEN`` / ``token_provider`` (AAD/MSI
+    ``Authorization: Bearer``, e.g. :func:`msi_token_provider`);
     optional ``AZURE_BLOB_ENDPOINT`` (Azurite-style
     ``http://host:port/account``; defaults to
     ``https://{account}.blob.core.windows.net``).  Paths are
     ``az://container/key...``.
     """
 
-    requires_localization = True
-
     _API_VERSION = "2021-08-06"
 
-    #: bounded transient-fault retry (429/5xx/resets), matching HttpFS
-    _RETRIES = 3
+    _ck = staticmethod(_ObjectStore._bk)
 
     def __init__(self, account: str | None = None,
                  key: str | None = None,
@@ -1564,8 +1576,9 @@ class AzureBlobFS:
                  sas_token: str | None = None,
                  bearer_token: str | None = None,
                  token_provider=None):
-        from collections import Counter
+        import base64
         from urllib.parse import parse_qsl
+        super().__init__(scratch_dir, "zcaz")
         self.account = account or os.environ["AZURE_STORAGE_ACCOUNT"]
         raw, sas, bearer = key or None, sas_token or None, \
             bearer_token or None
@@ -1574,32 +1587,18 @@ class AzureBlobFS:
             raw = os.environ.get("AZURE_STORAGE_KEY")
             sas = os.environ.get("AZURE_STORAGE_SAS_TOKEN")
             bearer = os.environ.get("AZURE_STORAGE_BEARER_TOKEN")
-        import base64
-        # three auth modes, account key preferred: SharedKey header
-        # signing when the key is present, else SAS query-parameter
-        # auth (the most common real-world Azure grant — a scoped,
-        # expiring token minted by the account owner; the client just
-        # appends it, servers verify), else AAD/MSI BEARER tokens
-        # (``Authorization: Bearer`` — the OAuth grant every
-        # role-assignment deployment uses; ``token_provider``, e.g.
-        # :func:`msi_token_provider`, refreshes expiring tokens).
-        # Blob Range reads, conditional PUT CAS and Copy Blob all work
-        # identically under SAS because the params ride every URL,
-        # including x-ms-copy-source; under bearer auth Copy Blob
-        # carries ``x-ms-copy-source-authorization`` instead.
-        self._bearer = None
-        self._bearer_exp: "float | None" = None
-        self._token_provider = None
+        # account key preferred, then SAS (the params ride every URL,
+        # x-ms-copy-source included), then bearer tokens (Copy Blob
+        # then carries x-ms-copy-source-authorization instead)
+        self._key = base64.b64decode(raw) if raw else None
+        self._sas = None
         if raw:
-            self._key = base64.b64decode(raw)
-            self._sas: dict | None = None
+            self._auth_mode = "SharedKey"
         elif sas:
-            self._key = None
+            self._auth_mode = "SAS"
             self._sas = dict(parse_qsl(sas.lstrip("?"),
                                        keep_blank_values=True))
         elif bearer or token_provider is not None:
-            self._key = None
-            self._sas = None
             self._bearer = bearer
             self._token_provider = token_provider
         else:
@@ -1611,18 +1610,8 @@ class AzureBlobFS:
                           or os.environ.get("AZURE_BLOB_ENDPOINT")
                           or f"https://{self.account}"
                           f".blob.core.windows.net").rstrip("/")
-        self._scratch_root = scratch_dir or os.path.join(
-            tempfile.gettempdir(), f"zcaz-{uuid.uuid4().hex[:8]}")
-        self._etags: dict[str, str] = {}
-        self.api_counts = Counter()
 
-    # -- path / signing helpers ----------------------------------------
-    @staticmethod
-    def _ck(path: str) -> tuple[str, str]:
-        rest = path.split("://", 1)[1] if "://" in path else path
-        container, _, key = rest.partition("/")
-        return container, key.strip("/")
-
+    # -- signing helpers -------------------------------------------------
     def _url(self, container: str, key: str, params: dict) -> str:
         from urllib.parse import quote, urlencode
         url = f"{self._endpoint}/{container}"
@@ -1633,24 +1622,6 @@ class AzureBlobFS:
         if params:
             url += "?" + urlencode(sorted(params.items()))
         return url
-
-    def _bearer_token(self, force_refresh: bool = False) -> str:
-        """Current OAuth access token; provider-backed tokens refresh
-        lazily 5 minutes before expiry (and immediately on a 401)."""
-        import time
-        if self._token_provider is not None and (
-                force_refresh or self._bearer is None
-                or (self._bearer_exp is not None
-                    and time.time() > self._bearer_exp - 300)):
-            token, expires = self._token_provider()
-            self._bearer = str(token)
-            self._bearer_exp = float(expires) if expires else None
-        if not self._bearer:
-            raise StoreError(
-                "AzureBlobFS bearer auth has no token (provider "
-                "returned nothing and AZURE_STORAGE_BEARER_TOKEN "
-                "is unset)")
-        return self._bearer
 
     def _authorization(self, method: str, container: str, key: str,
                        params: dict, headers: dict,
@@ -1748,420 +1719,119 @@ class AzureBlobFS:
                  params: dict | None = None,
                  headers: dict | None = None,
                  body: bytes | None = None):
-        """Signed request → ``(status, headers, body)``; 404/"absent"
-        mapping is per-operation (the S3FS ``_head`` rule: ONLY a real
-        404 may read as absent)."""
+        """Authorized request → ``(status, headers, body)`` through the
+        shared retry loop (:meth:`_ObjectStore._send`)."""
         import email.utils
-        import urllib.error
-        import urllib.request
         params = dict(params or {})
         headers = dict(headers or {})
-        if body is not None:
-            # urllib injects a default Content-Type on bodied requests
-            # AFTER signing — set it explicitly so the signed value and
-            # the sent value agree
-            headers.setdefault("Content-Type", "application/octet-stream")
         headers.setdefault("x-ms-date",
                            email.utils.formatdate(usegmt=True))
         headers.setdefault("x-ms-version", self._API_VERSION)
-        # bounded transient-fault retry (throttle 429/500/503 and
-        # connection resets), the same discipline as HttpFS — object
-        # stores throttle routinely and a flaky window must not fail
-        # an insert.  4xx (absent/conflict/precondition) never retries,
-        # EXCEPT one 401 under provider-backed bearer auth: the token
-        # may simply have expired mid-session — refresh once and retry.
-        import time
-        token_refreshed = False
-        attempt = 0
-        while True:
-            if self._key is not None:
-                headers["Authorization"] = self._authorization(
-                    method, container, key, params, headers, body)
-            elif self._sas is None:  # bearer (AAD/MSI) mode
-                headers["Authorization"] = \
-                    f"Bearer {self._bearer_token()}"
-            req = urllib.request.Request(
-                self._url(container, key, params), data=body,
-                headers=headers, method=method)
-            try:
-                with urllib.request.urlopen(req, timeout=60) as resp:
-                    return resp.status, dict(resp.headers), resp.read()
-            except urllib.error.HTTPError as exc:
-                data = exc.read()
-                if exc.code == 401 and self._token_provider is not None \
-                        and not token_refreshed:
-                    # the one free refresh does NOT consume a
-                    # transient-retry slot — a 401 landing on the last
-                    # attempt after a throttle streak must still get
-                    # its refreshed-token retry
-                    token_refreshed = True
-                    self._bearer_token(force_refresh=True)
-                    continue
-                if exc.code in (401, 403):
-                    mode = ("SharedKey" if self._key is not None else
-                            "SAS" if self._sas is not None else "bearer")
-                    raise StoreError(
-                        f"{method} az://{container}/{key} returned "
-                        f"{exc.code} under {mode} auth: check "
-                        f"credentials (signature, token expiry or "
-                        f"permissions)") from exc
-                if exc.code not in (429, 500, 503) \
-                        or attempt == self._RETRIES:
-                    return exc.code, dict(exc.headers), data
-            except urllib.error.URLError as exc:
-                if attempt == self._RETRIES:
-                    raise StoreError(
-                        f"Azure Blob endpoint unreachable: "
-                        f"{self._endpoint}: {exc}") from None
-            # every branch above returns or raises at the final
-            # attempt, so this backoff only runs with retries left
-            time.sleep(0.1 * (2 ** attempt))
-            attempt += 1
 
-    # -- contract surface ----------------------------------------------
-    def supports_atomic_rename(self, path: str) -> bool:
-        return False
+        def authorize(hdrs: dict) -> None:
+            if self._auth_mode == "SharedKey":
+                hdrs["Authorization"] = self._authorization(
+                    method, container, key, params, hdrs, body)
+            elif self._auth_mode == "bearer":
+                hdrs["Authorization"] = f"Bearer {self._bearer_token()}"
 
+        return self._send(method, self._url(container, key, params),
+                          headers, body, authorize,
+                          f"az://{container}/{key}")
+
+    # -- transport primitives --------------------------------------------
     def _head(self, container: str, key: str):
         self.api_counts["head"] += 1
         status, hdrs, _ = self._request("HEAD", container, key)
         if status == 404:
             return None
-        if status >= 400:
-            raise StoreError(
-                f"HEAD az://{container}/{key} failed: {status}")
+        self._ok(status, f"HEAD az://{container}/{key}")
         return hdrs
 
-    def mtime(self, path: str) -> "float | None":
+    @staticmethod
+    def _mtime(head) -> "float | None":
         import email.utils
-        container, key = self._ck(path)
-        hdrs = self._head(container, key)
-        lm = (hdrs or {}).get("Last-Modified")
-        if not lm:
-            return None
         try:
-            return email.utils.parsedate_to_datetime(lm).timestamp()
-        except (TypeError, ValueError):
+            return email.utils.parsedate_to_datetime(
+                head["Last-Modified"]).timestamp()
+        except (KeyError, TypeError, ValueError):
             return None
 
-    def _list_page(self, container: str, *, prefix: str,
+    def _list_page(self, container: str, prefix: str,
                    delimiter: str | None = None,
-                   marker: str | None = None):
-        """One List Blobs page → (blobs, prefixes, next_marker) where
-        blobs are (name, etag, size)."""
+                   token: str | None = None, limit: int | None = None):
         import xml.etree.ElementTree as ET
         self.api_counts["list"] += 1
         params = {"restype": "container", "comp": "list",
                   "prefix": prefix}
-        if delimiter:
-            params["delimiter"] = delimiter
-        if marker:
-            params["marker"] = marker
+        for name, value in (("delimiter", delimiter), ("marker", token),
+                            ("maxresults", limit)):
+            if value:
+                params[name] = str(value)
         status, _, body = self._request("GET", container, "", params)
-        if status >= 400:
-            raise StoreError(
-                f"LIST az://{container} ({prefix!r}) failed: {status}")
+        self._ok(status, f"LIST az://{container} ({prefix!r})")
         root = ET.fromstring(body.decode("utf-8"))
-        blobs = [(b.findtext("Name"),
-                  b.findtext("Properties/Etag") or "",
+        return ([(b.findtext("Name"), b.findtext("Properties/Etag") or "",
                   int(b.findtext("Properties/Content-Length") or 0))
-                 for b in root.iter("Blob")]
-        prefixes = [p.findtext("Name") for p in root.iter("BlobPrefix")]
-        return blobs, prefixes, (root.findtext("NextMarker") or None)
+                 for b in root.iter("Blob")],
+                [p.findtext("Name") for p in root.iter("BlobPrefix")],
+                root.findtext("NextMarker") or None)
 
-    def _iter_keys(self, container: str, prefix: str):
-        marker = None
-        while True:
-            blobs, _, marker = self._list_page(container, prefix=prefix,
-                                               marker=marker)
-            yield from blobs
-            if not marker:
-                return
-
-    def exists(self, path: str) -> bool:
-        container, key = self._ck(path)
-        if not key:
-            return True
-        if self._head(container, key) is not None:
-            return True
-        blobs, prefixes, _ = self._list_page(container,
-                                             prefix=key + "/")
-        return bool(blobs or prefixes)
-
-    def exists_file(self, path: str) -> bool:
-        container, key = self._ck(path)
-        return self._head(container, key) is not None
-
-    def read_text(self, path: str) -> str:
-        return self.read_bytes(path).decode("utf-8")
-
-    def read_bytes(self, path: str) -> bytes:
-        container, key = self._ck(path)
-        self.api_counts["get"] += 1
-        status, _, body = self._request("GET", container, key)
-        if status == 404:
-            raise FileNotFoundError(path)
-        if status >= 400:
-            raise StoreError(f"GET {path} failed: {status}")
-        return body
-
-    def write_text(self, path: str, data: str) -> None:
-        self.write_bytes(path, data.encode("utf-8"))
-
-    def write_bytes(self, path: str, data: bytes) -> None:
-        container, key = self._ck(path)
-        self.api_counts["put"] += 1
-        status, _, _ = self._request(
-            "PUT", container, key,
-            headers={"x-ms-blob-type": "BlockBlob"}, body=data)
-        if status >= 400:
-            raise StoreError(f"PUT {path} failed: {status}")
-
-    def read_versioned(self, path: str) -> tuple[str | None, str | None]:
-        container, key = self._ck(path)
+    def _get(self, container: str, key: str):
         self.api_counts["get"] += 1
         status, hdrs, body = self._request("GET", container, key)
         if status == 404:
-            return None, None
-        if status >= 400:
-            raise StoreError(f"GET {path} failed: {status}")
-        return body.decode("utf-8"), hdrs.get("ETag")
+            return None
+        self._ok(status, f"GET az://{container}/{key}")
+        return body, hdrs.get("ETag")
 
-    def write_if(self, path: str, data: str, token: str | None) -> str:
-        """Server-side compare-and-swap via conditional PUT — Azure
-        honors ``If-Match`` (update) and ``If-None-Match: *``
-        (create-only) on Put Blob; the losing writer gets 412 (or 409
-        BlobAlreadyExists for the create case)."""
-        container, key = self._ck(path)
-        cond = ({"If-None-Match": "*"} if token is None
-                else {"If-Match": token})
-        cond["x-ms-blob-type"] = "BlockBlob"
+    def _put(self, container: str, key: str, data: bytes,
+             cond: dict | None = None) -> "str | None":
         self.api_counts["put"] += 1
-        status, hdrs, _ = self._request("PUT", container, key,
-                                        headers=cond,
-                                        body=data.encode("utf-8"))
-        if status in (409, 412):
+        status, hdrs, _ = self._request(
+            "PUT", container, key,
+            headers={"x-ms-blob-type": "BlockBlob", **(cond or {})},
+            body=data)
+        if cond and status in (409, 412):
+            # 412 for a stale If-Match, 409 BlobAlreadyExists for a
+            # lost create-only race
             raise CommitConflictError(
-                f"{path}: conditional PUT lost the race ({status})")
-        if status >= 400:
-            raise StoreError(f"conditional PUT {path} failed: {status}")
+                f"az://{container}/{key}: conditional PUT lost the race "
+                f"({status})")
+        self._ok(status, f"PUT az://{container}/{key}")
         return hdrs.get("ETag")
 
-    def delete(self, path: str) -> None:
-        container, key = self._ck(path)
-        doomed = [key] if self._head(container, key) is not None else []
-        doomed += [name for name, _, _ in
-                   self._iter_keys(container, key + "/")]
-        for name in doomed:
-            self.api_counts["delete"] += 1
-            status, _, _ = self._request("DELETE", container, name)
-            if status >= 400 and status != 404:
-                raise StoreError(
-                    f"DELETE az://{container}/{name} failed: {status}")
+    def _put_if(self, container: str, key: str, data: bytes,
+                token: str | None) -> str:
+        return self._put(container, key, data,
+                         {"If-None-Match": "*"} if token is None
+                         else {"If-Match": token})
 
-    def mkdirs(self, path: str) -> None:
-        pass  # directories are prefix fictions on a flat keyspace
-
-    def _copy_blob(self, container: str, src_key: str,
-                   dst_key: str) -> None:
-        self.api_counts["copy"] += 1
-        src_url = self._url(container, src_key, {})
-        copy_headers = {"x-ms-copy-source": src_url}
-        if self._key is None and self._sas is None:
-            # bearer mode: the source URL carries no auth (unlike SAS,
-            # where the token rides x-ms-copy-source too) — the
-            # documented header authorizes the source read instead
-            copy_headers["x-ms-copy-source-authorization"] = \
-                f"Bearer {self._bearer_token()}"
-        status, hdrs, _ = self._request(
-            "PUT", container, dst_key, headers=copy_headers)
-        if status >= 400:
-            raise StoreError(
-                f"COPY az://{container}/{src_key} -> {dst_key} "
-                f"failed: {status}")
-        if hdrs.get("x-ms-copy-status", "success") != "success":
-            # block-blob copies within an account are synchronous; a
-            # pending status here would mean the delete below could
-            # race the copy — fail loudly instead
-            raise StoreError(
-                f"COPY az://{container}/{src_key} not synchronous "
-                f"(status {hdrs.get('x-ms-copy-status')})")
-
-    def move_file(self, src: str, dst: str) -> bool:
-        """Single-object move (caller did any dst-exists check): one
-        Copy Blob + one Delete.  False ONLY for a missing source."""
-        sc, sk = self._ck(src)
-        dc, dk = self._ck(dst)
-        if self._head(sc, sk) is None:
-            return False
-        self._copy_blob(sc, sk, dk) if sc == dc else \
-            self._copy_cross(sc, sk, dc, dk)
-        self._delete_source(sc, sk)
-        return True
-
-    def copy_file(self, src: str, dst: str) -> bool:
-        """Non-destructive server-side copy (one Copy Blob — bytes
-        never leave the account; retention copies use this).  False
-        ONLY for a missing source."""
-        sc, sk = self._ck(src)
-        dc, dk = self._ck(dst)
-        if self._head(sc, sk) is None:
-            return False
-        self._copy_blob(sc, sk, dk) if sc == dc else \
-            self._copy_cross(sc, sk, dc, dk)
-        return True
-
-    def _delete_source(self, container: str, key: str) -> None:
-        """Post-copy source delete: a silent failure would leave BOTH
-        src and dst visible as duplicate data, so anything but success
-        or already-gone (404) raises."""
+    def _delete_object(self, container: str, key: str) -> None:
         self.api_counts["delete"] += 1
         status, _, _ = self._request("DELETE", container, key)
-        if status >= 400 and status != 404:
-            raise StoreError(
-                f"DELETE az://{container}/{key} after copy failed: "
-                f"{status} (source blob survives; re-run the move)")
+        if status != 404:
+            self._ok(status, f"DELETE az://{container}/{key}")
 
-    def _copy_cross(self, sc: str, sk: str, dc: str, dk: str) -> None:
-        # cross-container copy: same API, source URL names the source
-        # container (rare in collection layouts; kept for contract
-        # completeness)
+    def _copy(self, sc: str, sk: str, dc: str, dk: str) -> bool:
+        """Copy Blob, within or across containers."""
         self.api_counts["copy"] += 1
-        status, hdrs, _ = self._request(
-            "PUT", dc, dk,
-            headers={"x-ms-copy-source": self._url(sc, sk, {})})
-        if status >= 400:
-            raise StoreError(f"COPY az://{sc}/{sk} -> az://{dc}/{dk} "
-                             f"failed: {status}")
-
-    def rename(self, src: str, dst: str) -> bool:
-        if self.exists(dst):
+        headers = {"x-ms-copy-source": self._url(sc, sk, {})}
+        if self._auth_mode == "bearer":
+            # the source URL carries no auth (under SAS the token rides
+            # x-ms-copy-source too) — the documented header authorizes
+            # the source read instead
+            headers["x-ms-copy-source-authorization"] = \
+                f"Bearer {self._bearer_token()}"
+        status, hdrs, _ = self._request("PUT", dc, dk, headers=headers)
+        if status == 404:
             return False
-        sc, sk = self._ck(src)
-        if self._head(sc, sk) is not None:
-            return self.move_file(src, dst)
-        keys = [k for k, _, _ in self._iter_keys(sc, sk + "/")]
-        if not keys:
-            return False
-        dc, dk = self._ck(dst)
-        for k in keys:
-            self._copy_blob(sc, k, dk + k[len(sk):]) if sc == dc else \
-                self._copy_cross(sc, k, dc, dk + k[len(sk):])
-            self._delete_source(sc, k)
+        self._ok(status, f"COPY az://{sc}/{sk} -> az://{dc}/{dk}")
+        if hdrs.get("x-ms-copy-status", "success") != "success":
+            raise StoreError(
+                f"COPY az://{sc}/{sk} not synchronous "
+                f"(status {hdrs.get('x-ms-copy-status')})")
         return True
-
-    def _delimited(self, path: str) -> tuple[list[str], list[str]]:
-        container, key = self._ck(path)
-        prefix = key + "/" if key else ""
-        files, dirs, marker = [], [], None
-        while True:
-            blobs, prefixes, marker = self._list_page(
-                container, prefix=prefix, delimiter="/", marker=marker)
-            files += [name[len(prefix):] for name, _, _ in blobs
-                      if name != prefix]
-            dirs += [p[len(prefix):].rstrip("/") for p in prefixes]
-            if not marker:
-                return sorted(files), sorted(dirs)
-
-    def list_files(self, path: str) -> list[str]:
-        return self._delimited(path)[0]
-
-    def list_dirs(self, path: str) -> list[str]:
-        return self._delimited(path)[1]
-
-    def _rel_keys(self, root: str):
-        container, base = self._ck(root)
-        start = len(base) + 1 if base else 0
-        for name, etag, size in self._iter_keys(
-                container, base + "/" if base else ""):
-            yield name[start:], etag, size
-
-    def walk_files(self, root: str) -> list[str]:
-        return sorted(
-            rel for rel, _, _ in self._rel_keys(root)
-            if not any(c.startswith(("_", "."))
-                       for c in rel.split("/")))
-
-    def list_partition_dirs(self, root: str, depth: int) -> list[str]:
-        out = set()
-        for rel, _, _ in self._rel_keys(root):
-            comps = rel.split("/")
-            if len(comps) <= depth:
-                continue
-            head = comps[:depth]
-            if any(c.startswith(("_", ".")) for c in comps) \
-                    or not all("=" in c for c in head):
-                continue
-            out.add("/".join(head))
-        return sorted(out)
-
-    # -- bulk bridge (no-JVM-connector configurations only) -------------
-    def new_scratch_dir(self) -> str:
-        path = os.path.join(self._scratch_root, "w", uuid.uuid4().hex)
-        os.makedirs(path, exist_ok=True)
-        return path
-
-    def upload_tree(self, local_dir: str, remote_dir: str) -> list[str]:
-        container, base = self._ck(remote_dir)
-        uploaded: list[str] = []
-        for dirpath, dirnames, filenames in os.walk(local_dir):
-            dirnames[:] = [d for d in dirnames
-                           if not d.startswith(("_", "."))]
-            for fname in filenames:
-                if fname.startswith(("_", ".")):
-                    continue
-                full = os.path.join(dirpath, fname)
-                rel = os.path.relpath(full, local_dir).replace(os.sep, "/")
-                with open(full, "rb") as fh:
-                    self.write_bytes(f"az://{container}/{base}/{rel}",
-                                     fh.read())
-                uploaded.append(rel)
-        shutil.rmtree(local_dir, ignore_errors=True)
-        return sorted(uploaded)
-
-    def localize(self, root: str,
-                 relpaths: "list[str] | None" = None) -> str:
-        """ETag-validated local mirror — same contract as
-        ``S3FS.localize`` (unchanged ETags never re-downloaded, vanished
-        blobs purged so a stale generation cannot leak into a scan)."""
-        container, base = self._ck(root)
-        mirror = os.path.join(self._scratch_root, "r", container,
-                              base.replace("/", "_"))
-        prefixes = relpaths if relpaths is not None else [""]
-        for rel in prefixes:
-            rkey = f"{base}/{rel}".strip("/") if rel else base
-            seen = set()
-            for name, etag, _ in self._iter_keys(
-                    container, rkey + "/" if rkey else ""):
-                krel = name[len(base) + 1:] if base else name
-                if rel == "" and any(c.startswith(("_", "."))
-                                     for c in krel.split("/")):
-                    continue
-                local = os.path.join(mirror, *krel.split("/"))
-                seen.add(local)
-                if self._etags.get(local) == etag \
-                        and os.path.exists(local):
-                    continue
-                os.makedirs(os.path.dirname(local), exist_ok=True)
-                with open(local, "wb") as fh:
-                    fh.write(self.read_bytes(f"az://{container}/{name}"))
-                self._etags[local] = etag
-            local_prefix = os.path.join(mirror, *rel.split("/")) \
-                if rel else mirror
-            if os.path.isdir(local_prefix):
-                for dirpath, _, filenames in os.walk(local_prefix):
-                    for fname in filenames:
-                        full = os.path.join(dirpath, fname)
-                        if full not in seen:
-                            os.remove(full)
-                            self._etags.pop(full, None)
-        return mirror
-
-
-#: One AzureBlobFS per (endpoint, account, key) — same reuse rationale
-#: as ``_S3_CACHE``.
-_AZ_CACHE: dict = {}
-_AZ_CACHE_LOCK = threading.Lock()
 
 
 def gce_metadata_token_provider(endpoint: str | None = None,
@@ -2382,56 +2052,37 @@ def gcs_keyfile_token_provider(
     return provider
 
 
-class GcsFS:
+class GcsFS(_ObjectStore):
     """Google Cloud Storage backend speaking the public JSON API
     directly (urllib + OAuth2 ``Authorization: Bearer`` — no SDK
-    dependency), closing the gs:// auth gap: the S3-interop path below
-    covers HMAC keys only, while real GCS deployments overwhelmingly
-    grant access through SERVICE ACCOUNTS (attached identities /
-    workload identity), whose credential is an OAuth2 access token.
-    The reference gets every GCS auth mode via obstore
+    dependency).  The S3-interop path covers HMAC keys only, while real
+    GCS deployments overwhelmingly grant access through SERVICE
+    ACCOUNTS, whose credential is an OAuth2 access token; the reference
+    gets every GCS auth mode via obstore
     (``/root/reference/zcollection/store/obstore_store.py:27``,
-    ``store/factory.py:22-79``); this class is the az AAD/MSI bearer
-    pattern (:class:`AzureBlobFS`, :func:`msi_token_provider`) cloned
-    onto GCS's documented endpoints.
+    ``store/factory.py:22-79``).
 
-    Same two-plane contract as :class:`S3FS` / :class:`AzureBlobFS`:
-
-    - **metadata plane**: objects get/insert/delete, metadata GET,
-      media GET (``?alt=media``), Objects: list (prefix/delimiter,
-      ``pageToken``-paginated), Objects: rewrite + delete for the
-      rename fiction, and TRUE server-side compare-and-swap via
-      generation preconditions (``ifGenerationMatch`` — 0 is
-      create-if-absent, a generation number is the documented CAS;
-      losers get 412), which is everything the catalog commit needs.
-    - **bulk plane**: with the gcs-connector on the cluster Spark scans
-      ``gs://`` natively; without a JVM connector
-      ``requires_localization`` routes bulk I/O through the scratch
-      bridge (:meth:`upload_tree` / generation-validated
-      :meth:`localize`) exactly like S3 and az.
-
-    Rename is rewrite+delete (non-atomic — ``gs`` is in
-    ``_NON_ATOMIC_RENAME_SCHEMES``), so collections on gs:// take the
-    manifest-driven file-granular publish path.
+    Transport for :class:`_ObjectStore`: object metadata GET (the
+    HEAD), media GET (``?alt=media``), media upload, Objects: list
+    (``pageToken``-paginated), Objects: rewrite (the server-side copy)
+    and delete, with compare-and-swap via generation preconditions
+    (``ifGenerationMatch`` — 0 is create-if-absent, a generation number
+    is the documented CAS; losers get 412).
 
     Configuration (env or constructor): ``GCS_BEARER_TOKEN`` (a static
-    OAuth2 access token) or ``GCE_METADATA_ENDPOINT`` (provider-backed
-    tokens with automatic refresh via
-    :func:`gce_metadata_token_provider`); optional ``GCS_JSON_ENDPOINT``
+    OAuth2 access token), ``GCS_KEYFILE`` (service-account JSON,
+    :func:`gcs_keyfile_token_provider`) or ``GCE_METADATA_ENDPOINT``
+    (:func:`gce_metadata_token_provider`) — both provider modes refresh
+    automatically; optional ``GCS_JSON_ENDPOINT``
     (fake-gcs-server-style ``http://host:port``; defaults to
     ``https://storage.googleapis.com``).  Paths are ``gs://bucket/key``.
     """
-
-    requires_localization = True
-
-    #: bounded transient-fault retry (429/5xx/resets), matching HttpFS
-    _RETRIES = 3
 
     def __init__(self, endpoint: str | None = None,
                  scratch_dir: str | None = None,
                  bearer_token: str | None = None,
                  token_provider=None):
-        from collections import Counter
+        super().__init__(scratch_dir, "zcgs")
         bearer = bearer_token or None
         if bearer is None and token_provider is None:
             bearer = os.environ.get("GCS_BEARER_TOKEN")
@@ -2447,22 +2098,10 @@ class GcsFS:
                 "for HMAC interop keys use the gs:// S3-interop path "
                 "instead")
         self._bearer = bearer
-        self._bearer_exp: "float | None" = None
         self._token_provider = token_provider
         self._endpoint = (endpoint
                           or os.environ.get("GCS_JSON_ENDPOINT")
                           or "https://storage.googleapis.com").rstrip("/")
-        self._scratch_root = scratch_dir or os.path.join(
-            tempfile.gettempdir(), f"zcgs-{uuid.uuid4().hex[:8]}")
-        self._generations: dict[str, str] = {}
-        self.api_counts = Counter()
-
-    # -- path / auth helpers ---------------------------------------------
-    @staticmethod
-    def _bk(path: str) -> tuple[str, str]:
-        rest = path.split("://", 1)[1] if "://" in path else path
-        bucket, _, key = rest.partition("/")
-        return bucket, key.strip("/")
 
     def _obj_url(self, bucket: str, key: str,
                  params: dict | None = None) -> str:
@@ -2476,410 +2115,124 @@ class GcsFS:
             url += "?" + urlencode(sorted(params.items()))
         return url
 
-    def _bearer_token(self, force_refresh: bool = False) -> str:
-        """Current OAuth access token; provider-backed tokens refresh
-        lazily 5 minutes before expiry (and immediately on a 401)."""
-        import time
-        if self._token_provider is not None and (
-                force_refresh or self._bearer is None
-                or (self._bearer_exp is not None
-                    and time.time() > self._bearer_exp - 300)):
-            token, expires = self._token_provider()
-            self._bearer = str(token)
-            self._bearer_exp = float(expires) if expires else None
-        if not self._bearer:
-            raise StoreError(
-                "GcsFS bearer auth has no token (provider returned "
-                "nothing and GCS_BEARER_TOKEN is unset)")
-        return self._bearer
-
     def _request(self, method: str, url: str,
                  headers: dict | None = None,
                  body: bytes | None = None):
-        """Bearer-authorized request → ``(status, headers, body)``;
-        404/"absent" mapping is per-operation (the S3FS ``_head`` rule:
-        ONLY a real 404 may read as absent).  Bounded transient-fault
-        retry (429/500/503/resets) like HttpFS; 4xx never retries,
-        EXCEPT one 401 under provider-backed auth — the token may have
-        expired mid-session, so refresh once and retry (same contract
-        as :class:`AzureBlobFS`)."""
-        import time
-        import urllib.error
-        import urllib.request
-        headers = dict(headers or {})
-        if body is not None:
-            headers.setdefault("Content-Type", "application/octet-stream")
-        token_refreshed = False
-        attempt = 0
-        while True:
-            headers["Authorization"] = f"Bearer {self._bearer_token()}"
-            req = urllib.request.Request(url, data=body, headers=headers,
-                                         method=method)
-            try:
-                with urllib.request.urlopen(req, timeout=60) as resp:
-                    return resp.status, dict(resp.headers), resp.read()
-            except urllib.error.HTTPError as exc:
-                data = exc.read()
-                if exc.code == 401 and self._token_provider is not None \
-                        and not token_refreshed:
-                    # the one free refresh does NOT consume a
-                    # transient-retry slot
-                    token_refreshed = True
-                    self._bearer_token(force_refresh=True)
-                    continue
-                if exc.code in (401, 403):
-                    raise StoreError(
-                        f"{method} {url.split('?')[0]} returned "
-                        f"{exc.code} under bearer auth: check the "
-                        f"token (expiry, scopes or IAM role)") from exc
-                if exc.code not in (429, 500, 503) \
-                        or attempt == self._RETRIES:
-                    return exc.code, dict(exc.headers), data
-            except urllib.error.URLError as exc:
-                if attempt == self._RETRIES:
-                    raise StoreError(
-                        f"GCS endpoint unreachable: {self._endpoint}: "
-                        f"{exc}") from None
-            time.sleep(0.1 * (2 ** attempt))
-            attempt += 1
+        """Bearer-authorized request → ``(status, headers, body)``
+        through the shared retry loop (:meth:`_ObjectStore._send`)."""
+        def authorize(hdrs: dict) -> None:
+            hdrs["Authorization"] = f"Bearer {self._bearer_token()}"
 
-    # -- contract surface --------------------------------------------------
-    def supports_atomic_rename(self, path: str) -> bool:
-        return False
+        return self._send(method, url, dict(headers or {}), body,
+                          authorize, url.split("?")[0])
 
-    def _meta(self, bucket: str, key: str) -> "dict | None":
+    # -- transport primitives --------------------------------------------
+    def _head(self, bucket: str, key: str) -> "dict | None":
         self.api_counts["head"] += 1
         status, _, body = self._request("GET", self._obj_url(bucket, key))
         if status == 404:
             return None
-        if status >= 400:
-            raise StoreError(
-                f"GET metadata gs://{bucket}/{key} failed: {status}")
+        self._ok(status, f"GET metadata gs://{bucket}/{key}")
         return json.loads(body)
 
-    def mtime(self, path: str) -> "float | None":
+    @staticmethod
+    def _mtime(head) -> "float | None":
         import datetime
-        bucket, key = self._bk(path)
-        meta = self._meta(bucket, key)
-        updated = (meta or {}).get("updated")
-        if not updated:
-            return None
         try:
             return datetime.datetime.fromisoformat(
-                updated.replace("Z", "+00:00")).timestamp()
-        except ValueError:
+                head["updated"].replace("Z", "+00:00")).timestamp()
+        except (KeyError, AttributeError, ValueError):
             return None
 
-    def _list_page(self, bucket: str, *, prefix: str,
+    def _list_page(self, bucket: str, prefix: str,
                    delimiter: str | None = None,
-                   page_token: str | None = None):
-        """One Objects:list page → (items, prefixes, next_token) where
-        items are (name, generation, size)."""
+                   token: str | None = None, limit: int | None = None):
         self.api_counts["list"] += 1
         params = {"prefix": prefix}
-        if delimiter:
-            params["delimiter"] = delimiter
-        if page_token:
-            params["pageToken"] = page_token
+        for name, value in (("delimiter", delimiter),
+                            ("pageToken", token), ("maxResults", limit)):
+            if value:
+                params[name] = value
         status, _, body = self._request(
             "GET", self._obj_url(bucket, "", params))
-        if status >= 400:
-            raise StoreError(
-                f"LIST gs://{bucket} ({prefix!r}) failed: {status}")
+        self._ok(status, f"LIST gs://{bucket} ({prefix!r})")
         doc = json.loads(body)
-        items = [(o["name"], o.get("generation", ""),
-                  int(o.get("size", 0))) for o in doc.get("items", ())]
-        return items, list(doc.get("prefixes", ())), \
-            doc.get("nextPageToken")
+        return ([(o["name"], o.get("generation", ""), int(o.get("size", 0)))
+                 for o in doc.get("items", ())],
+                list(doc.get("prefixes", ())), doc.get("nextPageToken"))
 
-    def _iter_keys(self, bucket: str, prefix: str):
-        token = None
-        while True:
-            items, _, token = self._list_page(bucket, prefix=prefix,
-                                              page_token=token)
-            yield from items
-            if not token:
-                return
-
-    def exists(self, path: str) -> bool:
-        bucket, key = self._bk(path)
-        if not key:
-            return True
-        if self._meta(bucket, key) is not None:
-            return True
-        items, prefixes, _ = self._list_page(bucket, prefix=key + "/")
-        return bool(items or prefixes)
-
-    def exists_file(self, path: str) -> bool:
-        bucket, key = self._bk(path)
-        return self._meta(bucket, key) is not None
-
-    def read_text(self, path: str) -> str:
-        return self.read_bytes(path).decode("utf-8")
-
-    def read_bytes(self, path: str) -> bytes:
-        bucket, key = self._bk(path)
-        self.api_counts["get"] += 1
-        status, _, body = self._request(
-            "GET", self._obj_url(bucket, key, {"alt": "media"}))
-        if status == 404:
-            raise FileNotFoundError(path)
-        if status >= 400:
-            raise StoreError(f"GET {path} failed: {status}")
-        return body
-
-    def write_text(self, path: str, data: str) -> None:
-        self.write_bytes(path, data.encode("utf-8"))
-
-    def _upload(self, bucket: str, key: str, data: bytes,
-                extra_params: dict | None = None):
-        from urllib.parse import urlencode
-        params = {"uploadType": "media", "name": key}
-        params.update(extra_params or {})
-        url = (f"{self._endpoint}/upload/storage/v1/b/{bucket}/o?"
-               + urlencode(sorted(params.items())))
-        return self._request("POST", url, body=data)
-
-    def write_bytes(self, path: str, data: bytes) -> None:
-        bucket, key = self._bk(path)
-        self.api_counts["put"] += 1
-        status, _, _ = self._upload(bucket, key, data)
-        if status >= 400:
-            raise StoreError(f"PUT {path} failed: {status}")
-
-    def read_versioned(self, path: str) -> tuple[str | None, str | None]:
-        bucket, key = self._bk(path)
+    def _get(self, bucket: str, key: str):
         self.api_counts["get"] += 1
         status, hdrs, body = self._request(
             "GET", self._obj_url(bucket, key, {"alt": "media"}))
         if status == 404:
-            return None, None
-        if status >= 400:
-            raise StoreError(f"GET {path} failed: {status}")
-        return body.decode("utf-8"), hdrs.get("x-goog-generation")
+            return None
+        self._ok(status, f"GET gs://{bucket}/{key}")
+        return body, hdrs.get("x-goog-generation")
 
-    def write_if(self, path: str, data: str, token: str | None) -> str:
-        """Server-side compare-and-swap via generation preconditions —
-        the documented GCS contract: ``ifGenerationMatch=0`` means
-        create-only, a generation number means replace-exactly-this;
-        the losing writer gets 412."""
-        bucket, key = self._bk(path)
+    def _put(self, bucket: str, key: str, data: bytes,
+             cond: dict | None = None) -> "str | None":
+        from urllib.parse import urlencode
         self.api_counts["put"] += 1
-        status, _, body = self._upload(
-            bucket, key, data.encode("utf-8"),
-            {"ifGenerationMatch": token if token is not None else "0"})
-        if status == 412:
+        params = {"uploadType": "media", "name": key, **(cond or {})}
+        status, _, body = self._request(
+            "POST", f"{self._endpoint}/upload/storage/v1/b/{bucket}/o?"
+            + urlencode(sorted(params.items())), body=data)
+        if cond and status == 412:
             raise CommitConflictError(
-                f"{path}: conditional PUT lost the race ({status})")
-        if status >= 400:
-            raise StoreError(f"conditional PUT {path} failed: {status}")
-        return json.loads(body).get("generation")
+                f"gs://{bucket}/{key}: conditional PUT lost the race "
+                f"({status})")
+        self._ok(status, f"PUT gs://{bucket}/{key}")
+        return json.loads(body).get("generation") if cond else None
 
-    def delete(self, path: str) -> None:
-        bucket, key = self._bk(path)
-        doomed = [key] if self._meta(bucket, key) is not None else []
-        doomed += [name for name, _, _ in
-                   self._iter_keys(bucket, key + "/")]
-        for name in doomed:
-            self.api_counts["delete"] += 1
-            status, _, _ = self._request(
-                "DELETE", self._obj_url(bucket, name))
-            if status >= 400 and status != 404:
-                raise StoreError(
-                    f"DELETE gs://{bucket}/{name} failed: {status}")
+    def _put_if(self, bucket: str, key: str, data: bytes,
+                token: str | None) -> str:
+        return self._put(bucket, key, data, {
+            "ifGenerationMatch": token if token is not None else "0"})
 
-    def mkdirs(self, path: str) -> None:
-        pass  # directories are prefix fictions on a flat keyspace
+    def _delete_object(self, bucket: str, key: str) -> None:
+        self.api_counts["delete"] += 1
+        status, _, _ = self._request("DELETE", self._obj_url(bucket, key))
+        if status != 404:
+            self._ok(status, f"DELETE gs://{bucket}/{key}")
 
-    def _rewrite(self, sb: str, sk: str, db: str, dk: str) -> None:
-        """Objects: rewrite — the documented server-side copy.  Large
-        objects may need several calls chained by ``rewriteToken``;
-        loop until ``done`` (single-call for the sizes catalogs move,
-        but the protocol requires the loop)."""
+    def _copy(self, sb: str, sk: str, db: str, dk: str) -> bool:
+        """Objects: rewrite.  Large objects may need several calls
+        chained by ``rewriteToken``, so loop until ``done``."""
         from urllib.parse import quote, urlencode
         self.api_counts["copy"] += 1
-        rewrite_token = None
+        url = (f"{self._endpoint}/storage/v1/b/{sb}/o/{quote(sk, safe='')}"
+               f"/rewriteTo/b/{db}/o/{quote(dk, safe='')}")
+        query = ""
         while True:
-            url = (f"{self._endpoint}/storage/v1/b/{sb}/o/"
-                   f"{quote(sk, safe='')}/rewriteTo/b/{db}/o/"
-                   f"{quote(dk, safe='')}")
-            if rewrite_token:
-                url += "?" + urlencode({"rewriteToken": rewrite_token})
-            status, _, body = self._request("POST", url, body=b"")
+            status, _, body = self._request("POST", url + query, body=b"")
             if status == 404:
-                raise FileNotFoundError(f"gs://{sb}/{sk}")
-            if status >= 400:
-                raise StoreError(
-                    f"REWRITE gs://{sb}/{sk} -> gs://{db}/{dk} "
-                    f"failed: {status}")
+                return False
+            self._ok(status, f"REWRITE gs://{sb}/{sk} -> gs://{db}/{dk}")
             doc = json.loads(body)
             if doc.get("done", True):
-                return
-            rewrite_token = doc.get("rewriteToken")
-
-    def _delete_source(self, bucket: str, key: str) -> None:
-        """Post-copy source delete: a silent failure would leave BOTH
-        src and dst visible as duplicate data, so anything but success
-        or already-gone (404) raises."""
-        self.api_counts["delete"] += 1
-        status, _, _ = self._request(
-            "DELETE", self._obj_url(bucket, key))
-        if status >= 400 and status != 404:
-            raise StoreError(
-                f"DELETE gs://{bucket}/{key} after copy failed: "
-                f"{status} (source object survives; re-run the move)")
-
-    def move_file(self, src: str, dst: str) -> bool:
-        """Single-object move (caller did any dst-exists check): one
-        rewrite + one delete.  False ONLY for a missing source."""
-        sb, sk = self._bk(src)
-        db, dk = self._bk(dst)
-        if self._meta(sb, sk) is None:
-            return False
-        self._rewrite(sb, sk, db, dk)
-        self._delete_source(sb, sk)
-        return True
-
-    def copy_file(self, src: str, dst: str) -> bool:
-        """Non-destructive server-side copy (one Objects: rewrite —
-        bytes never leave GCS; retention copies use this).  False ONLY
-        for a missing source."""
-        sb, sk = self._bk(src)
-        db, dk = self._bk(dst)
-        if self._meta(sb, sk) is None:
-            return False
-        self._rewrite(sb, sk, db, dk)
-        return True
-
-    def rename(self, src: str, dst: str) -> bool:
-        if self.exists(dst):
-            return False
-        sb, sk = self._bk(src)
-        if self._meta(sb, sk) is not None:
-            return self.move_file(src, dst)
-        keys = [k for k, _, _ in self._iter_keys(sb, sk + "/")]
-        if not keys:
-            return False
-        db, dk = self._bk(dst)
-        for k in keys:
-            self._rewrite(sb, k, db, dk + k[len(sk):])
-            self._delete_source(sb, k)
-        return True
-
-    def _delimited(self, path: str) -> tuple[list[str], list[str]]:
-        bucket, key = self._bk(path)
-        prefix = key + "/" if key else ""
-        files, dirs, token = [], [], None
-        while True:
-            items, prefixes, token = self._list_page(
-                bucket, prefix=prefix, delimiter="/", page_token=token)
-            files += [name[len(prefix):] for name, _, _ in items
-                      if name != prefix]
-            dirs += [p[len(prefix):].rstrip("/") for p in prefixes
-                     if p[len(prefix):].rstrip("/") not in dirs]
-            if not token:
-                return sorted(files), sorted(dirs)
-
-    def list_files(self, path: str) -> list[str]:
-        return self._delimited(path)[0]
-
-    def list_dirs(self, path: str) -> list[str]:
-        return self._delimited(path)[1]
-
-    def _rel_keys(self, root: str):
-        bucket, base = self._bk(root)
-        start = len(base) + 1 if base else 0
-        for name, gen, size in self._iter_keys(
-                bucket, base + "/" if base else ""):
-            yield name[start:], gen, size
-
-    def walk_files(self, root: str) -> list[str]:
-        return sorted(
-            rel for rel, _, _ in self._rel_keys(root)
-            if not any(c.startswith(("_", "."))
-                       for c in rel.split("/")))
-
-    def list_partition_dirs(self, root: str, depth: int) -> list[str]:
-        out = set()
-        for rel, _, _ in self._rel_keys(root):
-            comps = rel.split("/")
-            if len(comps) <= depth:
-                continue
-            head = comps[:depth]
-            if any(c.startswith(("_", ".")) for c in comps) \
-                    or not all("=" in c for c in head):
-                continue
-            out.add("/".join(head))
-        return sorted(out)
-
-    # -- bulk bridge (no-JVM-connector configurations only) ---------------
-    def new_scratch_dir(self) -> str:
-        path = os.path.join(self._scratch_root, "w", uuid.uuid4().hex)
-        os.makedirs(path, exist_ok=True)
-        return path
-
-    def upload_tree(self, local_dir: str, remote_dir: str) -> list[str]:
-        bucket, base = self._bk(remote_dir)
-        uploaded: list[str] = []
-        for dirpath, dirnames, filenames in os.walk(local_dir):
-            dirnames[:] = [d for d in dirnames
-                           if not d.startswith(("_", "."))]
-            for fname in filenames:
-                if fname.startswith(("_", ".")):
-                    continue
-                full = os.path.join(dirpath, fname)
-                rel = os.path.relpath(full, local_dir).replace(os.sep, "/")
-                with open(full, "rb") as fh:
-                    self.write_bytes(f"gs://{bucket}/{base}/{rel}",
-                                     fh.read())
-                uploaded.append(rel)
-        shutil.rmtree(local_dir, ignore_errors=True)
-        return sorted(uploaded)
-
-    def localize(self, root: str,
-                 relpaths: "list[str] | None" = None) -> str:
-        """Generation-validated local mirror — same contract as
-        ``S3FS.localize`` (unchanged generations never re-downloaded,
-        vanished objects purged so a stale generation cannot leak into
-        a scan)."""
-        bucket, base = self._bk(root)
-        mirror = os.path.join(self._scratch_root, "r", bucket,
-                              base.replace("/", "_"))
-        prefixes = relpaths if relpaths is not None else [""]
-        for rel in prefixes:
-            rkey = f"{base}/{rel}".strip("/") if rel else base
-            seen = set()
-            for name, gen, _ in self._iter_keys(
-                    bucket, rkey + "/" if rkey else ""):
-                krel = name[len(base) + 1:] if base else name
-                if rel == "" and any(c.startswith(("_", "."))
-                                     for c in krel.split("/")):
-                    continue
-                local = os.path.join(mirror, *krel.split("/"))
-                seen.add(local)
-                if self._generations.get(local) == gen \
-                        and os.path.exists(local):
-                    continue
-                os.makedirs(os.path.dirname(local), exist_ok=True)
-                with open(local, "wb") as fh:
-                    fh.write(self.read_bytes(f"gs://{bucket}/{name}"))
-                self._generations[local] = gen
-            local_prefix = os.path.join(mirror, *rel.split("/")) \
-                if rel else mirror
-            if os.path.isdir(local_prefix):
-                for dirpath, _, filenames in os.walk(local_prefix):
-                    for fname in filenames:
-                        full = os.path.join(dirpath, fname)
-                        if full not in seen:
-                            os.remove(full)
-                            self._generations.pop(full, None)
-        return mirror
+                return True
+            query = "?" + urlencode({"rewriteToken": doc["rewriteToken"]})
 
 
-#: One GcsFS per (endpoint, credential) — same reuse rationale as
-#: ``_S3_CACHE``.
-_GCS_CACHE: dict = {}
-_GCS_CACHE_LOCK = threading.Lock()
+#: One store instance per (backend, endpoint, credential hash): the
+#: client, the scratch root and the version-validated localize mirror
+#: are all reusable; a fresh instance per fs_for call would re-download
+#: every mirrored object for each Collection handle on the same store.
+_STORES: dict = {}
+_STORES_LOCK = threading.Lock()
+
+
+def _cached_store(key: tuple, make):
+    with _STORES_LOCK:
+        if key not in _STORES:
+            _STORES[key] = make()
+        return _STORES[key]
+
+
+def _cred_hash(*parts: "str | None") -> str:
+    return hashlib.sha256("\x00".join(p or "" for p in parts)
+                          .encode()).hexdigest()
 
 
 def fs_for(path: str, spark: SparkSession | None = None):
@@ -2888,11 +2241,7 @@ def fs_for(path: str, spark: SparkSession | None = None):
         return _MEMORY_FS
     scheme = scheme_of(path)
     if scheme in ("http", "https"):
-        global _HTTP_FS
-        with _HTTP_FS_LOCK:
-            if _HTTP_FS is None:
-                _HTTP_FS = HttpFS()
-            return _HTTP_FS
+        return _cached_store(("http",), HttpFS)
     if scheme == "az":
         account = os.environ.get("AZURE_STORAGE_ACCOUNT")
         azkey = os.environ.get("AZURE_STORAGE_KEY")
@@ -2902,22 +2251,17 @@ def fs_for(path: str, spark: SparkSession | None = None):
         if account and (azkey or azsas or azbearer or azmsi):
             endpoint = (os.environ.get("AZURE_BLOB_ENDPOINT")
                         or f"https://{account}.blob.core.windows.net")
-            cred = hashlib.sha256(
-                f"{account}\x00{azkey or ''}\x00{azsas or ''}"
-                f"\x00{azbearer or ''}\x00{azmsi or ''}"
-                .encode()).hexdigest()
             # MSI endpoint configured and no static credential wins:
             # provider-backed bearer auth with automatic refresh
-            provider = (msi_token_provider()
+            provider = (msi_token_provider
                         if azmsi and not (azkey or azsas or azbearer)
-                        else None)
-            with _AZ_CACHE_LOCK:
-                cache_key = (endpoint, cred)
-                if cache_key not in _AZ_CACHE:
-                    _AZ_CACHE[cache_key] = AzureBlobFS(
-                        account, azkey, endpoint, sas_token=azsas,
-                        bearer_token=azbearer, token_provider=provider)
-                return _AZ_CACHE[cache_key]
+                        else lambda: None)
+            return _cached_store(
+                ("az", endpoint, _cred_hash(account, azkey, azsas,
+                                            azbearer, azmsi)),
+                lambda: AzureBlobFS(account, azkey, endpoint,
+                                    sas_token=azsas, bearer_token=azbearer,
+                                    token_provider=provider()))
         # no usable credential (no account key, SAS, bearer token or
         # MSI endpoint): fall through to the JVM hadoop-azure
         # connector (service-principal auth)
@@ -2928,66 +2272,49 @@ def fs_for(path: str, spark: SparkSession | None = None):
         # config (endpoint only, or key without secret) would sign
         # googleapis.com requests with ambient AWS credentials or die
         # with PartialCredentialsError.  No HMAC pair: try the NATIVE
-        # service-account path (OAuth bearer against the JSON API —
-        # the az AAD/MSI pattern) before surrendering to the JVM
-        # gcs-connector
+        # service-account path (OAuth bearer against the JSON API)
+        # before surrendering to the JVM gcs-connector
         gsbearer = os.environ.get("GCS_BEARER_TOKEN")
         gskeyfile = os.environ.get("GCS_KEYFILE")
         gsmeta = os.environ.get("GCE_METADATA_ENDPOINT")
         if gsbearer or gskeyfile or gsmeta:
             endpoint = (os.environ.get("GCS_JSON_ENDPOINT")
                         or "https://storage.googleapis.com")
-            cred = hashlib.sha256(
-                f"{gsbearer or ''}\x00{gskeyfile or ''}"
-                f"\x00{gsmeta or ''}".encode()).hexdigest()
             # static token wins; then the JSON keyfile (JWT grant —
-            # the off-GCE mode); then the metadata server.  Both
-            # provider modes refresh automatically (pre-expiry + 401)
-            provider = None
-            if not gsbearer:
-                provider = (gcs_keyfile_token_provider() if gskeyfile
-                            else gce_metadata_token_provider())
-            with _GCS_CACHE_LOCK:
-                cache_key = (endpoint, cred)
-                if cache_key not in _GCS_CACHE:
-                    _GCS_CACHE[cache_key] = GcsFS(
-                        endpoint, bearer_token=gsbearer,
-                        token_provider=provider)
-                return _GCS_CACHE[cache_key]
+            # the off-GCE mode); then the metadata server
+            provider = (lambda: None) if gsbearer else (
+                gcs_keyfile_token_provider if gskeyfile
+                else gce_metadata_token_provider)
+            return _cached_store(
+                ("gcs", endpoint, _cred_hash(gsbearer, gskeyfile, gsmeta)),
+                lambda: GcsFS(endpoint, bearer_token=gsbearer,
+                              token_provider=provider()))
         scheme = "gs-hadoop"
     if scheme in ("s3", "s3a", "s3n", "gs"):
         # The supported object-store class is "speaks the S3 API".
         # That covers real S3, any S3-compatible endpoint (MinIO,
         # Ceph, moto), and Google Cloud Storage through its XML
         # interoperability API (HMAC keys + https://storage.
-        # googleapis.com — a documented, public GCS mode).  Azure Blob
-        # does not speak S3: az://-style paths fall through to the
-        # HadoopFS branch (JVM hadoop-azure connector), the same way
-        # the reference delegates multi-scheme auth to obstore
-        # (store/factory.py:22-79).
+        # googleapis.com — a documented, public GCS mode).
         if scheme == "gs":
             endpoint = os.environ.get("GCS_ENDPOINT_URL",
                                       "https://storage.googleapis.com")
             access = os.environ.get("GCS_ACCESS_KEY_ID")
             secret = os.environ.get("GCS_SECRET_ACCESS_KEY")
-            cred_src = (endpoint, access or "", secret or "")
+            cred = _cred_hash(endpoint, access, secret)
         else:
             endpoint = os.environ.get("AWS_ENDPOINT_URL")
             access = secret = None
-            cred_src = tuple(os.environ.get(k, "") for k in
-                             ("AWS_ACCESS_KEY_ID",
-                              "AWS_SECRET_ACCESS_KEY",
-                              "AWS_SESSION_TOKEN"))
-        cred = hashlib.sha256("\x00".join(cred_src).encode()).hexdigest()
-        key = (scheme == "gs", endpoint,
-               os.environ.get("AWS_REGION"), cred)
+            cred = _cred_hash(*(os.environ.get(k) for k in
+                                ("AWS_ACCESS_KEY_ID",
+                                 "AWS_SECRET_ACCESS_KEY",
+                                 "AWS_SESSION_TOKEN")))
         try:
-            with _S3_CACHE_LOCK:
-                if key not in _S3_CACHE:
-                    _S3_CACHE[key] = S3FS(endpoint_url=endpoint,
-                                          access_key=access,
-                                          secret_key=secret)
-                return _S3_CACHE[key]
+            return _cached_store(
+                ("s3", scheme == "gs", endpoint,
+                 os.environ.get("AWS_REGION"), cred),
+                lambda: S3FS(endpoint_url=endpoint, access_key=access,
+                             secret_key=secret))
         except ImportError:
             pass  # no boto3: fall through to the JVM connector
     if "://" in path and not path.startswith("file://"):
